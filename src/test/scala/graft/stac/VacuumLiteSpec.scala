@@ -147,6 +147,30 @@ class VacuumLiteSpec extends AnyFunSuite {
     assert(PortableDelta.readTable(spark, path).count() == 60L)
   }
 
+  test("a deleted _last_checkpoint: both vacuums still see the checkpoint") {
+    val path = tmp()
+    PortableDelta.write(mk("v0", 3), path)                       // 3 files
+    PortableDelta.write(mk("v1", 2), path, mode = "append")      // +2 files
+    PortableDelta.write(mk("dead", 1), path, mode = "append")
+    PortableDelta.delete(spark, path, col("tag") === "dead")     // tombstone
+    PortableDelta.checkpoint(spark, path)
+    PortableDelta.cleanupLog(spark.sessionState.newHadoopConf(), path)
+    // a crash (or maintenance) lost the pointer; the checkpoint stays
+    val logDir = s"$path/_delta_log"
+    assert(new java.io.File(logDir, "_last_checkpoint").delete())
+    new java.io.File(logDir, "._last_checkpoint.crc").delete()
+    assert(!new java.io.File(logDir).listFiles()
+      .exists(_.getName.matches("\\d{20}\\.json")), "cleanupLog left JSON")
+    assert(PortableDelta.readTable(spark, path).count() == 60L)
+    assert(parquetCount(path) == 6)
+    // lite finds the tombstone the checkpoint carries
+    assert(PortableDelta.vacuumLite(spark, path, graceMillis = 0L) == 1)
+    // the full vacuum must protect every add the checkpoint holds
+    assert(PortableDelta.vacuum(spark, path, graceMillis = 0L) == 0)
+    assert(parquetCount(path) == 5)
+    assert(PortableDelta.readTable(spark, path).count() == 60L)
+  }
+
   test("DV packs reclaim with their files; live packs are protected") {
     val path = tmp()
     PortableDelta.write(mk("v0", 2), path)                       // v0
