@@ -236,9 +236,7 @@ private[stac] trait DeltaAlterOps extends Serializable { self: PortableDelta.typ
       name match {
         case "deletionVectors" =>
           requirePropOff("delta.enableDeletionVectors")
-          val dvFiles = narrowedSnapshot(spark, path,
-            (_, df) => df.filter(col("dv_storageType").isNotNull),
-            s => s.files.filter(_.dv.isDefined)).files
+          val dvFiles = logState(spark, path, None).files(_.dv.isDefined)
           require(dvFiles.isEmpty,
             s"cannot drop 'deletionVectors' from $path: ${dvFiles.size} live " +
               "file(s) still carry deletion vectors — run reorgPurge first")
@@ -607,10 +605,7 @@ private[stac] trait DeltaAlterOps extends Serializable { self: PortableDelta.typ
         // bytes already carry logical names — but a dropped column's
         // lingering bytes would zombie once the mapping is gone
         val probe = staleBytesProbe(spark, path, small)
-        val stale = narrowedSnapshot(spark, path,
-          (_, df) => df.filter { (r: org.apache.spark.sql.Row) =>
-            probe(r.getString(0)) },
-          s => s.files.filter(f => probe(f.path))).files
+        val stale = logState(spark, path, None).files(f => probe(f.path))
         require(stale.isEmpty,
           s"cannot disable column mapping on $path: ${stale.size} file(s) " +
             "still hold bytes of dropped column(s) — run " +
@@ -948,23 +943,18 @@ private[stac] trait DeltaAlterOps extends Serializable { self: PortableDelta.typ
       // ENABLING icebergCompatV2 validates the EXISTING table first
       // (PROTOCOL.md: all live adds must carry numRecords, none may
       // carry a DV, mapping mode must be name/id). The add check runs
-      // executor-side over the flat add frame — O(1) driver rows, the
-      // smallSnapshot discipline survives.
+      // executor-side; only offending files reach the driver.
       if (icebergV2Enabled(cfg) && !icebergV2Enabled(snap.configuration)) {
         val mode = cfg.getOrElse("delta.columnMapping.mode", "none")
         require(mode == "name" || mode == "id",
           s"cannot enable $IcebergV2Prop on $path: requires " +
             s"delta.columnMapping.mode 'name' or 'id' (got '$mode') — " +
             "refusing to commit")
-        import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-        val (adds, _) = liveAddsFlatDf(spark, path)
-        val bad = adds.agg(
-          sum(when(col("dv_storageType").isNotNull, 1L).otherwise(0L)),
-          sum(when(col("stats").isNull ||
-            !col("stats").contains("\"numRecords\""), 1L).otherwise(0L)),
-          count(lit(1))).head()
-        val (nDv, nNoStats) = (if (bad.isNullAt(0)) 0L else bad.getLong(0),
-          if (bad.isNullAt(1)) 0L else bad.getLong(1))
+        def noNumRecords(f: AddFile) = !f.stats.exists(_.contains("\"numRecords\""))
+        val bad = logState(spark, path, None)
+          .files(f => f.dv.isDefined || noNumRecords(f))
+        val (nDv, nNoStats) = (bad.count(_.dv.isDefined).toLong,
+          bad.count(noNumRecords).toLong)
         require(nDv == 0L && nNoStats == 0L,
           s"cannot enable $IcebergV2Prop on $path: $nDv live file(s) " +
             s"carry deletion vectors and $nNoStats lack the numRecords " +

@@ -76,10 +76,7 @@ private[stac] trait DeltaChangeFeedOps extends Serializable { self: PortableDelt
       require(fs.exists(p),
         s"CDF needs commit $v of $path but its JSON is not available " +
           "(checkpoint-truncated log)")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      val nodes = lines.filter(_.nonEmpty).map(mapper.readTree)
+      val nodes = jsonActions(fs, p)
       // spec CDF precedence: when a commit carries `cdc` actions
       // (AddCDCFile — what delta-spark with delta.enableChangeDataFeed
       // writes), those files ARE the complete change description for the
@@ -378,10 +375,7 @@ private[stac] trait DeltaChangeFeedOps extends Serializable { self: PortableDelt
     require(fs.exists(p),
       s"append stream needs commit $v of $path but its JSON is not " +
         "available (checkpoint-truncated log)")
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val nodes = lines.filter(_.nonEmpty).map(mapper.readTree)
+    val nodes = jsonActions(fs, p)
     val adds = nodes.filter(_.has("add")).map(_.get("add"))
       .filter(a => Option(a.get("dataChange")).forall(_.asBoolean()))
       .map(parseAddNode)
@@ -567,11 +561,8 @@ private[stac] trait DeltaChangeFeedOps extends Serializable { self: PortableDelt
       path: String, v: Long): (Int, Long) = {
     val p = new Path(logDir(path), versionFileName(v))
     val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
     var files = 0; var bytes = 0L
-    lines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
+    jsonActions(fs, p).foreach { n =>
       Seq("add", "cdc", "remove").foreach { k =>
         if (n.has(k)) {
           files += 1
@@ -644,21 +635,10 @@ private[stac] trait DeltaChangeFeedOps extends Serializable { self: PortableDelt
     // build OUTSIDE the lock: the sort/persist/count are Spark jobs —
     // holding the global monitor through them would serialize unrelated
     // tables' drains behind one build
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = logDir(path).getFileSystem(conf)
-    // lazy path: a checkpoint at/under the pinned version whose JSON
-    // tail reaches it exactly — adds stay a DataFrame end-to-end
-    val lazyState = checkpointRefFor(conf, path, versionAsOf).flatMap { ref =>
-      val have = listJsonCommits(fs, path).map(_._1).toSet
-      if ((ref.version + 1 to versionAsOf).forall(have.contains))
-        Some(lazyCheckpointState(spark, path, ref, versionAsOf))
-      else None
-    }
-    val (snapBase, addsDf) = lazyState.getOrElse {
-      val snap = snapshotAt(spark, path, versionAsOf)
-      (snap.copy(files = Nil), addFilesToFlatDf(spark, snap.files))
-    }
-    val ordered = addsDf.sort("path")
+    // checkpoint-seeded state keeps its adds a DataFrame end-to-end
+    val ls = logState(spark, path, Some(versionAsOf))
+    val snapBase = ls.small
+    val ordered = ls.addsDf(spark).sort("path")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = ordered.rdd
       .mapPartitionsWithIndex((pi, it) => Iterator.single(pi -> it.size.toLong))

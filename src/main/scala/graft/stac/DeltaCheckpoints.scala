@@ -10,8 +10,13 @@ import scala.jdk.CollectionConverters._
 
 /** Checkpoint + replay machinery of [[PortableDelta]]: classic /
   * multi-part / v2 checkpoint writers, log compaction, checkpoint
-  * discovery and seeding, snapshot replay, and time travel. Split from
-  * PortableDelta.scala; self-typed — behavior unchanged. */
+  * discovery, and the ONE log replay every reader and writer goes
+  * through — [[logState]]: the newest checkpoint at or below the
+  * wanted version plus the JSON commits after it, or the whole JSON
+  * log when no checkpoint applies. File state comes out of it through
+  * one accessor, [[LogState.files]], taking a single `AddFile =>
+  * Boolean` predicate; frame consumers (checkpoint writers, the
+  * format route, metadata aggregates) take [[LogState.addsDf]]. */
 private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelta.type =>
 
   /** Physical row count from the parquet footer — a metadata-only read. */
@@ -93,18 +98,21 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     spark.createDataFrame(rows.asJava, FlatAddSchema)
   }
 
-  /** The JSON commits strictly AFTER version `cv`, ascending, with the
-    * contiguity check. */
-  /** Every commit JSON in the log as (version, path), ascending — the
-    * ONE listing idiom shared by tail replay, lazy state, and slice
-    * pinning (contiguity rules stay with each caller). */
+  /** True for a commit JSON's file name, `<20-digit version>.json` —
+    * the one place that naming rule lives. */
+  private[stac] def isCommitJson(name: String): Boolean =
+    name.matches("\\d{20}\\.json")
+
+  /** Every commit JSON in the log as (version, path), ascending. */
   private[stac] def listJsonCommits(fs: org.apache.hadoop.fs.FileSystem,
                               path: String): Seq[(Long, Path)] =
     fs.listStatus(logDir(path)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.matches("\\d{20}\\.json"))
+      .filter(s => s.isFile && isCommitJson(s.getPath.getName))
       .map(s => s.getPath.getName.stripSuffix(".json").toLong -> s.getPath)
       .sortBy(_._1)
 
+  /** The JSON commits strictly AFTER version `cv`, ascending, with the
+    * contiguity check. */
   private[stac] def tailCommits(fs: org.apache.hadoop.fs.FileSystem, path: String,
                           cv: Long): Seq[(Long, Path)] = {
     val tail = listJsonCommits(fs, path).filter(_._1 > cv)
@@ -113,50 +121,86 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     tail
   }
 
-  /** CURRENT live adds as a flat DataFrame plus the current version. The
-    * distributed replay: checkpoint adds stay executor-side; only the
-    * bounded JSON tail (commits since the checkpoint — the maintenance
-    * cadence) is parsed on the driver, and its per-path final states
-    * merge in via a broadcast anti-join + union. Before the first
-    * checkpoint the whole log IS the bounded tail. */
-  private[stac] def liveAddsFlatDf(spark: SparkSession, path: String): (DataFrame, Long) = {
+  /** The parsed nodes of one newline-delimited JSON log file (a commit,
+    * a compacted span, the history sidecar), one per non-empty line. */
+  private[stac] def jsonActions(fs: org.apache.hadoop.fs.FileSystem,
+                                p: Path): Seq[JsonNode] = {
+    val in = fs.open(p)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.filter(_.nonEmpty).map(mapper.readTree)
+  }
+
+  /** THE log replay: the table's state at `asOf` (None = the current
+    * version) is the newest checkpoint at or below it plus the JSON
+    * commits after that checkpoint (compacted spans substitute where
+    * they fit); with no usable checkpoint the JSON log replays from
+    * version 0 on the driver — a young log, no Spark job. The small
+    * state and the tail's net adds are parsed on the driver; the
+    * checkpoint's adds stay a DataFrame minus every path the tail
+    * touched, so no caller materializes a checkpoint's add list unless
+    * it asks [[LogState.files]] for it. Errors name the gap: a hole in
+    * the tail after the current checkpoint is "non-contiguous"; a
+    * version neither a checkpoint nor the JSON log reaches is "not
+    * reconstructable". */
+  private[stac] def logState(spark: SparkSession, path: String,
+                             asOf: Option[Long]): LogState = {
     val conf = spark.sessionState.newHadoopConf()
-    checkpointRefFor(conf, path) match {
+    val latest = checkpointRefFor(conf, path)
+    if (asOf.isEmpty && latest.isEmpty) return youngState(snapshot(conf, path))
+    val dir = logDir(path)
+    val fs = dir.getFileSystem(conf)
+    require(fs.exists(dir), s"no Delta table at $path (no _delta_log)")
+    val jsons = listJsonCommits(fs, path).toMap
+    val current = (jsons.keySet ++ latest.map(_.version)).maxOption
+      .getOrElse(throw new IllegalArgumentException(s"empty Delta log at $dir"))
+    val target = asOf.getOrElse(current)
+    require(target <= current,
+      s"versionAsOf $target exceeds the current version $current of $path")
+    val ref = asOf.fold(latest)(checkpointRefFor(conf, path, _))
+    ref.flatMap(r => replayPlan(fs, path, jsons, r.version + 1, target).map(r -> _)) match {
+      case Some((r, tail)) => checkpointState(spark, path, fs, r, tail, target)
       case None =>
-        val snap = snapshot(conf, path)
-        (addFilesToFlatDf(spark, snap.files), snap.version)
-      case Some(ref) =>
-        val fs = logDir(path).getFileSystem(conf)
-        val tail = tailCommits(fs, path, ref.version)
-        // per-path FINAL state over the tail, in replay order
-        val touched = scala.collection.mutable.LinkedHashMap.empty[String, Option[AddFile]]
-        tail.foreach { case (_, p) =>
-          val in = fs.open(p)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-            finally in.close()
-          lines.filter(_.nonEmpty).map(mapper.readTree).foreach { node =>
-            if (node.has("add")) {
-              val f = parseAddNode(node.get("add"))
-              touched.put(f.path, Some(f))
-            }
-            if (node.has("remove"))
-              touched.put(node.get("remove").get("path").asText(), None)
-          }
-        }
-        val ckptAdds = ckptAddsFlatDf(spark, path, ref)
-        val base =
-          if (touched.isEmpty) ckptAdds
-          else {
-            val touchedDf = spark.createDataFrame(
-              touched.keys.map(p => org.apache.spark.sql.Row(p)).toSeq.asJava,
-              StructType(Seq(StructField("path", StringType))))
-            ckptAdds.join(
-              org.apache.spark.sql.functions.broadcast(touchedDf), Seq("path"), "left_anti")
-          }
-        val tailAdds = addFilesToFlatDf(spark, touched.values.flatten.toSeq)
-        (base.unionByName(tailAdds),
-          if (tail.isEmpty) ref.version else tail.last._1)
+        ref.foreach(r => require(asOf.isDefined,
+          s"non-contiguous Delta log after checkpoint ${r.version}: " +
+            jsons.keys.filter(_ > r.version).toSeq.sorted.mkString(",")))
+        val plan = replayPlan(fs, path, jsons, 0L, target).getOrElse(
+          throw new IllegalArgumentException(
+            s"version $target of $path is not reconstructable: JSON log covers " +
+              s"[${jsons.keySet.minOption.getOrElse(-1L)}, ${jsons.keySet.maxOption.getOrElse(-1L)}]" +
+              ref.fold(", no checkpoint")(r => s", checkpoint at ${r.version}") +
+              " (cleanupLog truncated past it)"))
+        val st = new ReplayState(path)
+        plan.foreach(applyJsonCommit(fs, _, st))
+        youngState(st.toSnapshot(target))
     }
+  }
+
+  private def youngState(snap: Snapshot): LogState =
+    LogState(snap.copy(files = Nil), None, None, snap.files)
+
+  /** Checkpoint-seeded replay: small state from the checkpoint's
+    * column-pruned non-file rows, then the tail `tail` (ending at
+    * `version`) on the driver, recording every path it touches. */
+  private def checkpointState(spark: SparkSession, path: String,
+                              fs: org.apache.hadoop.fs.FileSystem,
+                              ref: CheckpointRef, tail: Seq[Path],
+                              version: Long): LogState = {
+    val st = new ReplayState(path)
+    val top = ckptRawDf(spark, path, ref)
+    seedCheckpointSmall(top, path, ref, st)
+    val touched = scala.collection.mutable.HashSet.empty[String]
+    tail.foreach(p => jsonActions(fs, p).foreach { node =>
+      if (node.has("add")) touched += node.get("add").get("path").asText()
+      if (node.has("remove")) touched += node.get("remove").get("path").asText()
+      st.applyJson(node)
+    })
+    val ckpt = ckptAddsFlatDf(spark, path, top)
+    val untouched =
+      if (touched.isEmpty) ckpt
+      else ckpt.filter(!org.apache.spark.sql.functions.col("path").isInCollection(touched))
+    val snap = st.toSnapshot(version)
+    LogState(snap.copy(files = Nil), Some(ref), Some(untouched), snap.files)
   }
 
   /** Write the spec's checkpoint for the CURRENT version V — single-file
@@ -175,20 +219,21 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     require(addsPerPart >= 1, s"addsPerPart must be >= 1, got $addsPerPart")
     val conf = spark.sessionState.newHadoopConf()
     val fs = logDir(path).getFileSystem(conf)
-    val st = seededSmallState(spark, path)
-    expireTxns(st)
-    val (adds, version) = liveAddsFlatDf(spark, path)
+    val ls = logState(spark, path, None)
+    val snap = expireTxns(ls.small)
+    val version = snap.version
+    val adds = ls.addsDf(spark)
     val nAdds = adds.count()
     val parts = math.max(1L, (nAdds + addsPerPart - 1) / addsPerPart).toInt
-    val all = applyStatsShape(smallActionsDf(spark, st)
-      .unionByName(addActionsDf(adds)), st)
+    val all = applyStatsShape(smallActionsDf(spark, snap)
+      .unionByName(addActionsDf(adds)), snap)
       .withColumn("remove", lit(null).cast(RemoveT))
     // vacuum-retention tombstones carry forward (spec + delta-spark
     // shape): unexpired removes survive log truncation inside the
     // checkpoint, so log-based reclaim ([[vacuumLite]]) keeps seeing
     // them; expired ones drop here — the checkpoint cadence IS the
     // tombstone GC
-    val tombs = tombstoneRowsDf(spark, path, adds, st.configuration)
+    val tombs = tombstoneRowsDf(spark, path, ls, adds)
     val nTombs = tombs.count()
     val full =
       if (nTombs == 0) all else all.unionByName(removeActionRows(all, tombs))
@@ -223,7 +268,7 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
       }
     fs.delete(tmp, true)
     val lc = new Path(logDir(path), "_last_checkpoint")
-    val sizeJson = 2 + nAdds + nTombs + st.txns.size + st.domains.size
+    val sizeJson = 2 + nAdds + nTombs + snap.txns.size + snap.domainMetadata.size
     val partsJson = if (k == 1) "" else s""","parts":$k"""
     // sizeInBytes / numOfAddFiles are the spec's optional hint fields —
     // engines use them to budget checkpoint reads without opening footers
@@ -232,12 +277,12 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     try out.write(
       (s"""{"version":$version,"size":$sizeJson$partsJson""" +
         s""","sizeInBytes":$bytes,"numOfAddFiles":$nAdds""" +
-        protectionHintJson(st) + "}").getBytes("UTF-8"))
+        protectionHintJson(snap.configuration) + "}").getBytes("UTF-8"))
     finally out.close()
     // authoritative crc at the checkpoint version (post-txn-expiry
     // state; also heals a chain broken by external/legacy commits)
-    reseedChecksum(conf, path, version, st, adds, nAdds)
-    maybeCleanupExpiredLog(conf, path, st)
+    reseedChecksum(conf, path, snap, adds, nAdds)
+    maybeCleanupExpiredLog(conf, path, snap.configuration)
     version
   }
 
@@ -249,43 +294,14 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     * truncate-all legacy behavior, which stays an explicit
     * [[cleanupLog]] call). */
   private[stac] def maybeCleanupExpiredLog(conf: Configuration, path: String,
-                                     st: ReplayState): Unit =
-    if (st.configuration.get("delta.enableExpiredLogCleanup").contains("true")) {
-      val retain = st.configuration.get("delta.logRetentionDuration")
+                                     cfg: Map[String, String]): Unit =
+    if (cfg.get("delta.enableExpiredLogCleanup").contains("true")) {
+      val retain = cfg.get("delta.logRetentionDuration")
         .flatMap(parseInterval).getOrElse(30L * 86400000L)
       cleanupLog(conf, path, Some(retain),
-        protectBefore = protectionBoundary(st.configuration))
+        protectBefore = protectionBoundary(cfg))
       ()
     }
-
-  /** Current small replay state (protocol/metaData/txns) WITHOUT
-    * materializing add actions on the driver: seeds from the last
-    * checkpoint's column-pruned small rows + the JSON tail, or replays
-    * the whole (young) JSON log pre-first-checkpoint. */
-  private[stac] def seededSmallState(spark: SparkSession, path: String): ReplayState = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = logDir(path).getFileSystem(conf)
-    val st = new ReplayState(path)
-    checkpointRefFor(conf, path) match {
-      case None =>
-        val snap = snapshot(conf, path) // pre-first-checkpoint: log is young
-        st.readerV = snap.minReaderVersion; st.writerV = snap.minWriterVersion
-        st.readerFeatures = snap.readerFeatures; st.writerFeatures = snap.writerFeatures
-        st.tableId = snap.tableId; st.schemaJson = snap.schema.json
-        st.configuration = snap.configuration
-        st.partitionCols = snap.partitionColumns
-        snap.txns.foreach { case (k, v) => st.txns.put(k, v) }
-        snap.txnLastUpdated.foreach { case (k, v) => st.txnTimes.put(k, v) }
-        snap.domainMetadata.foreach { case (k, v) => st.domains.put(k, v) }
-      case Some(ref) =>
-        seedCheckpointSmall(spark, path, ref, st)
-        tailCommits(fs, path, ref.version).foreach { case (_, p) =>
-          applyJsonCommit(fs, p, st)
-        }
-    }
-    st.requireReadable()
-    st
-  }
 
   /** Expire per-appId txn watermarks at checkpoint time per the spec's
     * `delta.setTransactionRetentionDuration` table property: a txn whose
@@ -293,19 +309,19 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     * the checkpoint (writers "are allowed to expire" them — delta-spark
     * does exactly this). Txns WITHOUT a lastUpdated are never expired
     * (their age is unknown), and nothing expires when the property is
-    * unset. Returns the number of appIds dropped. */
-  private[stac] def expireTxns(st: ReplayState): Int =
-    st.configuration.get("delta.setTransactionRetentionDuration")
-      .flatMap(parseInterval).map { ret =>
+    * unset. Returns `snap` without the expired appIds. */
+  private[stac] def expireTxns(snap: Snapshot): Snapshot =
+    snap.configuration.get("delta.setTransactionRetentionDuration")
+      .flatMap(parseInterval).fold(snap) { ret =>
         val cut = System.currentTimeMillis() - ret
-        val dead = st.txnTimes.collect { case (app, t) if t < cut => app }.toSeq
-        dead.foreach { app => st.txns.remove(app); st.txnTimes.remove(app) }
-        dead.size
-      }.getOrElse(0)
+        val dead = snap.txnLastUpdated.collect { case (app, t) if t < cut => app }
+        snap.copy(txns = snap.txns -- dead,
+          txnLastUpdated = snap.txnLastUpdated -- dead)
+      }
 
   /** The non-file checkpoint actions (protocol + metaData + per-appId
     * txn watermarks) as action rows (protocol, metaData, add, txn). */
-  private[stac] def smallActionsDf(spark: SparkSession, st: ReplayState): DataFrame = {
+  private[stac] def smallActionsDf(spark: SparkSession, snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.{array, lit, struct, typedLit}
     val s = spark; import s.implicits._
     val emptyMap = typedLit(Map.empty[String, String])
@@ -315,29 +331,29 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     val nullTxn = lit(null).cast(TxnT)
     val nullDomain = lit(null).cast(DomainT)
     val protocolDf = Seq(1).toDF("x").select(
-      struct(lit(st.readerV).as("minReaderVersion"),
-        lit(st.writerV).as("minWriterVersion"),
-        (if (st.readerFeatures.nonEmpty) typedLit(st.readerFeatures)
+      struct(lit(snap.minReaderVersion).as("minReaderVersion"),
+        lit(snap.minWriterVersion).as("minWriterVersion"),
+        (if (snap.readerFeatures.nonEmpty) typedLit(snap.readerFeatures)
          else lit(null).cast("array<string>")).as("readerFeatures"),
-        (if (st.writerFeatures.nonEmpty) typedLit(st.writerFeatures)
+        (if (snap.writerFeatures.nonEmpty) typedLit(snap.writerFeatures)
          else lit(null).cast("array<string>")).as("writerFeatures")).as("protocol"),
       nullMeta.as("metaData"), nullAdd.as("add"), nullTxn.as("txn"),
       nullDomain.as("domainMetadata"))
     val metaDf = Seq(1).toDF("x").select(
       nullProto.as("protocol"),
-      struct(lit(st.tableId).as("id"),
+      struct(lit(snap.tableId).as("id"),
         struct(lit("parquet").as("provider"), emptyMap.as("options")).as("format"),
-        lit(st.schemaJson).as("schemaString"),
-        (if (st.partitionCols.nonEmpty) typedLit(st.partitionCols)
+        lit(snap.schema.json).as("schemaString"),
+        (if (snap.partitionColumns.nonEmpty) typedLit(snap.partitionColumns)
          else array().cast("array<string>")).as("partitionColumns"),
-        typedLit(st.configuration).as("configuration"),
+        typedLit(snap.configuration).as("configuration"),
         lit(System.currentTimeMillis()).as("createdTime")).as("metaData"),
       nullAdd.as("add"), nullTxn.as("txn"), nullDomain.as("domainMetadata"))
     // the per-appId streaming watermarks must survive log truncation —
     // the spec stores the latest txn action per appId in the checkpoint
-    val txnsDf = st.txns.toSeq
+    val txnsDf = snap.txns.toSeq
       .map { case (app, v) =>
-        (app, v, st.txnTimes.get(app).map(java.lang.Long.valueOf).orNull) }
+        (app, v, snap.txnLastUpdated.get(app).map(java.lang.Long.valueOf).orNull) }
       .toDF("app", "v", "lu").select(
         nullProto.as("protocol"), nullMeta.as("metaData"), nullAdd.as("add"),
         struct($"app".as("appId"), $"v".as("version"),
@@ -345,7 +361,7 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
         nullDomain.as("domainMetadata"))
     // live (non-removed) domainMetadata survives the checkpoint too —
     // row tracking's high-water mark rides here
-    val domainsDf = st.domains.toSeq
+    val domainsDf = snap.domainMetadata.toSeq
       .toDF("d", "c").select(
         nullProto.as("protocol"), nullMeta.as("metaData"), nullAdd.as("add"),
         nullTxn.as("txn"),
@@ -358,12 +374,12 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     * stats selection: numRecords + typed min/max + nullCount over the
     * stats-eligible columns (physical names on mapped tables — the keys
     * the stats JSON carries). */
-  private[stac] def statsParsedType(st: ReplayState): StructType = {
-    val logical = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
+  private[stac] def statsParsedType(snap: Snapshot): StructType = {
+    val logical = snap.schema
     val (phys, logOpt) =
-      if (mappedCfg(st.configuration)) (physSchemaOf(logical), Some(logical))
+      if (mappedCfg(snap.configuration)) (physSchemaOf(logical), Some(logical))
       else (logical, None)
-    val cols = DeltaStats.statsColumns(phys, st.configuration, logOpt)
+    val cols = DeltaStats.statsColumns(phys, snap.configuration, logOpt)
     // dotted selections (nested leaves) nest in the struct exactly as
     // they nest in the stats JSON
     val mm = DeltaStats.nestedStructOf(cols)
@@ -385,11 +401,11 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     * `delta.checkpoint.writeStatsAsJson=false` then drops the JSON
     * form (refused unless the struct is on — a checkpoint must keep
     * stats in SOME form). */
-  private[stac] def applyStatsShape(df: DataFrame, st: ReplayState): DataFrame = {
+  private[stac] def applyStatsShape(df: DataFrame, snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.{col, from_json}
-    val asStruct = st.configuration
+    val asStruct = snap.configuration
       .get("delta.checkpoint.writeStatsAsStruct").contains("true")
-    val asJson = !st.configuration
+    val asJson = !snap.configuration
       .get("delta.checkpoint.writeStatsAsJson").contains("false")
     require(asJson || asStruct,
       "delta.checkpoint.writeStatsAsJson=false requires " +
@@ -398,15 +414,14 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     var out = df
     if (asStruct) {
       out = out.withColumn("add", col("add").withField("stats_parsed",
-        from_json(col("add.stats"), statsParsedType(st))))
+        from_json(col("add.stats"), statsParsedType(snap))))
       // the struct shape's sibling: TYPED partition values
       // (partitionValues_parsed — keys are the physical names the
       // string map already carries on mapped tables)
-      if (st.partitionCols.nonEmpty) {
-        val logical = DataType.fromJson(st.schemaJson).asInstanceOf[StructType]
-        val byName = logical.fields.map(f => f.name -> f).toMap
+      if (snap.partitionColumns.nonEmpty) {
+        val byName = snap.schema.fields.map(f => f.name -> f).toMap
         val typed = org.apache.spark.sql.functions.struct(
-          st.partitionCols.map { c =>
+          snap.partitionColumns.map { c =>
             val f = byName(c)
             val pn = physFieldName(f)
             org.apache.spark.sql.functions
@@ -422,7 +437,7 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     out
   }
 
-  /** Flat add rows ([[liveAddsFlatDf]] shape) → checkpoint action rows
+  /** Flat add rows ([[FlatAddSchema]] shape) → checkpoint action rows
     * (protocol, metaData, add, txn) — stays a DataFrame end-to-end. */
   private[stac] def addActionsDf(adds: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, struct, typedLit, when}
@@ -500,19 +515,20 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
         }
       }
     }
-    val st = seededSmallState(spark, path)
-    expireTxns(st)
-    val (adds, version) = liveAddsFlatDf(spark, path)
+    val ls = logState(spark, path, None)
+    val snap = expireTxns(ls.small)
+    val version = snap.version
+    val adds = ls.addsDf(spark)
     val nAdds = adds.count()
     val shards = math.max(1L, (nAdds + addsPerSidecar - 1) / addsPerSidecar).toInt
     // sidecar files: add/remove action rows only, exact UUID names —
     // tombstones are FILE actions, so they ride the sidecars per spec
     val sidecarDir = new Path(logDir(path), "_sidecars")
     fs.mkdirs(sidecarDir)
-    val sidecarAdds = applyStatsShape(addActionsDf(adds), st)
+    val sidecarAdds = applyStatsShape(addActionsDf(adds), snap)
       .select(org.apache.spark.sql.functions.col("add"))
       .withColumn("remove", lit(null).cast(RemoveT))
-    val tombs = tombstoneRowsDf(spark, path, adds, st.configuration)
+    val tombs = tombstoneRowsDf(spark, path, ls, adds)
     val nTombs = tombs.count()
     val sidecarActions =
       if (nTombs == 0) sidecarAdds
@@ -538,7 +554,7 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     import org.apache.spark.sql.functions.struct
     val ckptMetaT = "struct<version:bigint>"
     val sidecarT = "struct<path:string,sizeInBytes:bigint,modificationTime:bigint>"
-    val small = smallActionsDf(spark, st)
+    val small = smallActionsDf(spark, snap)
       .withColumn("remove", lit(null).cast(RemoveT))
       .withColumn("checkpointMetadata", lit(null).cast(ckptMetaT))
       .withColumn("sidecar", lit(null).cast(sidecarT))
@@ -574,13 +590,13 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
       sidecars.map(_._2).sum
     val out = fs.create(lc, true)
     try out.write(
-      (s"""{"version":$version,"size":${2 + nAdds + nTombs + st.txns.size + st.domains.size}""" +
+      (s"""{"version":$version,"size":${2 + nAdds + nTombs + snap.txns.size + snap.domainMetadata.size}""" +
         s""","sizeInBytes":$bytes,"numOfAddFiles":$nAdds""" +
-        protectionHintJson(st) + "}")
+        protectionHintJson(snap.configuration) + "}")
         .getBytes("UTF-8"))
     finally out.close()
-    reseedChecksum(conf, path, version, st, adds, nAdds)
-    maybeCleanupExpiredLog(conf, path, st)
+    reseedChecksum(conf, path, snap, adds, nAdds)
+    maybeCleanupExpiredLog(conf, path, snap.configuration)
     version
   }
 
@@ -616,10 +632,7 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
       val p = new Path(dir, versionFileName(v))
       require(fs.exists(p),
         s"cannot compact [$startV, $endV] of $path: commit $v's JSON is gone")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
+      jsonActions(fs, p).foreach { n =>
         if (n.has("protocol")) protoNode = Some(n)
         if (n.has("metaData")) metaNode = Some(n)
         if (n.has("txn"))
@@ -909,12 +922,12 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
   }
 
   /** Seed ONLY the small state (protocol / metaData / txn) from the
-    * checkpoint — a column-pruned scan that never reads the add column,
-    * so a million-add checkpoint costs a few KB of driver memory here. */
-  private[stac] def seedCheckpointSmall(spark: SparkSession, path: String,
+    * checkpoint's top-level frame `df` ([[ckptRawDf]]) — a column-pruned
+    * scan that never reads the add column, so a million-add checkpoint
+    * costs a few KB of driver memory here. */
+  private[stac] def seedCheckpointSmall(df: DataFrame, path: String,
                                   ref: CheckpointRef, st: ReplayState): Unit = {
     import org.apache.spark.sql.functions.col
-    val df = ckptRawDf(spark, path, ref)
     // v2 checkpoints carry a checkpointMetadata action naming the version
     // the file snapshots — a mismatch means _last_checkpoint and the UUID
     // file disagree (torn maintenance); fail rather than replay wrong state
@@ -983,13 +996,13 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
       s"checkpoint ${ref.version} at $path carries no metaData row")
   }
 
-  /** The checkpoint's add actions as a FLAT DataFrame (path, size,
-    * modificationTime, dv_*) — the distributed half of replay: these rows
-    * flow checkpoint→checkpoint (and into narrow driver projections)
-    * without ever materializing full action rows on the driver. */
+  /** The add actions of the checkpoint whose top-level frame is `top`
+    * ([[ckptRawDf]]) as a FLAT DataFrame (path, size, modificationTime,
+    * dv_*) — the distributed half of replay: these rows flow
+    * checkpoint→checkpoint (and into narrow driver projections) without
+    * ever materializing full action rows on the driver. */
   private[stac] def ckptAddsFlatDf(spark: SparkSession, path: String,
-                             ref: CheckpointRef): DataFrame = {
-    val top = ckptRawDf(spark, path, ref)
+                             top: DataFrame): DataFrame = {
     val topAdds = flatAddsFrom(spark, top)
     val sidecarFiles = sidecarFilesOf(path, top)
     if (sidecarFiles.isEmpty) topAdds
@@ -1020,8 +1033,7 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     * forward; external delta-spark checkpoints do the same). Never
     * replay state. */
   private[stac] def ckptRemovesFlatDf(spark: SparkSession, path: String,
-                                ref: CheckpointRef): DataFrame = {
-    val top = ckptRawDf(spark, path, ref)
+                                top: DataFrame): DataFrame = {
     val topRemoves = flatRemovesFrom(spark, top)
     val sidecarFiles = sidecarFilesOf(path, top)
     if (sidecarFiles.isEmpty) topRemoves
@@ -1070,33 +1082,26 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     * checkpoint on executors; only the bounded tail parses on the
     * driver. */
   private[stac] def tombstoneRowsDf(spark: SparkSession, path: String,
-                              liveAdds: DataFrame,
-                              cfg: Map[String, String]): DataFrame = {
+                              ls: LogState, liveAdds: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, row_number}
     val conf = spark.sessionState.newHadoopConf()
     val fs = logDir(path).getFileSystem(conf)
-    val retention = cfg.get("delta.deletedFileRetentionDuration")
+    val retention = ls.small.configuration.get("delta.deletedFileRetentionDuration")
       .flatMap(parseInterval).getOrElse(7L * 24 * 3600 * 1000)
     val cutoff = System.currentTimeMillis() - retention
-    val priorRef = checkpointRefFor(conf, path)
-    val prior = priorRef.map(ckptRemovesFlatDf(spark, path, _))
+    val prior = ls.checkpoint.map(ref =>
+        ckptRemovesFlatDf(spark, path, ckptRawDf(spark, path, ref)))
       .getOrElse(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FlatRemoveSchema))
-    val tailJsons: Seq[Path] = priorRef match {
-      case Some(ref) => tailCommits(fs, path, ref.version).map(_._2)
-      case None => fs.listStatus(logDir(path)).toSeq
-        .filter(st => st.isFile && st.getPath.getName.matches("\\d{20}\\.json"))
-        .map(_.getPath).sortBy(_.getName)
-    }
+    val after = ls.checkpoint.fold(-1L)(_.version)
+    val tailJsons = listJsonCommits(fs, path).collect {
+      case (v, p) if v > after && v <= ls.small.version => p }
     def jL(o: Option[Long]): java.lang.Long =
       o.map(java.lang.Long.valueOf).orNull
     def jI(o: Option[Int]): java.lang.Integer =
       o.map(java.lang.Integer.valueOf).orNull
     val tailRows = tailJsons.flatMap { p =>
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).flatMap { n =>
+      jsonActions(fs, p).flatMap { n =>
         if (!n.has("remove")) Nil
         else {
           val r = n.get("remove")
@@ -1239,95 +1244,18 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
       if (r.length <= 12 || r.isNullAt(12)) None else Some(r.getString(12)))
   }
 
-  /** Compat seeding for the Snapshot API: small state + a NARROW driver
-    * collect of the flat add projection (8 scalar columns, not full
-    * action rows — the round-7 judge's `.collect()` nit). Callers that
-    * stay distributed (checkpoint rewrite) use [[ckptAddsFlatDf]]. */
-  private[stac] def seedCheckpoint(spark: SparkSession, path: String,
-                             ref: CheckpointRef, st: ReplayState): Unit = {
-    seedCheckpointSmall(spark, path, ref, st)
-    ckptAddsFlatDf(spark, path, ref).collect().foreach { r =>
-      val f = rowToAddFile(r)
-      st.live.put(f.path, f)
-    }
-  }
-
   private[stac] def applyJsonCommit(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                              st: ReplayState): Unit = {
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    lines.filter(_.nonEmpty).foreach(line => st.applyJson(mapper.readTree(line)))
-  }
-
-  private[stac] def checkpointSnapshot(spark: SparkSession, path: String,
-                                 ref: CheckpointRef): Snapshot = {
-    val conf = spark.sessionState.newHadoopConf()
-    val cv = ref.version
-    val fs = logDir(path).getFileSystem(conf)
-    val st = new ReplayState(path)
-    seedCheckpoint(spark, path, ref, st)
-    // JSON commits after the checkpoint (contiguous from cv+1, if any)
-    val tail = fs.listStatus(logDir(path)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.matches("\\d{20}\\.json"))
-      .map(s => s.getPath.getName.stripSuffix(".json").toLong -> s.getPath)
-      .filter(_._1 > cv).sortBy(_._1)
-    require(tail.map(_._1) == (cv + 1 to cv + tail.size),
-      s"non-contiguous Delta log after checkpoint $cv: ${tail.map(_._1).mkString(",")}")
-    var version = cv
-    tail.foreach { case (v, p) =>
-      version = v
-      applyJsonCommit(fs, p, st)
-    }
-    st.toSnapshot(version)
-  }
+                              st: ReplayState): Unit =
+    jsonActions(fs, p).foreach(st.applyJson)
 
   /** Time travel: the table state AS OF `versionAsOf` (the Delta
-    * `versionAsOf` read). Replays JSON commits 0..v when they survive,
-    * else seeds from a checkpoint at cv ≤ v and applies the JSON tail
-    * (cv, v]; errors — naming what is reconstructable — when cleanupLog
-    * has truncated past the requested version. */
+    * `versionAsOf` read) — [[logState]] at that version: the newest
+    * checkpoint at cv ≤ v plus the JSON tail (cv, v], else the JSON
+    * commits 0..v; errors — naming what is reconstructable — when
+    * cleanupLog has truncated past the requested version. */
   def snapshotAt(spark: SparkSession, path: String, versionAsOf: Long): Snapshot = {
     require(versionAsOf >= 0, s"versionAsOf must be >= 0, got $versionAsOf")
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = logDir(path)
-    val fs = dir.getFileSystem(conf)
-    require(fs.exists(dir), s"no Delta table at $path (no _delta_log)")
-    val jsons = fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.matches("\\d{20}\\.json"))
-      .map(s => s.getPath.getName.stripSuffix(".json").toLong -> s.getPath)
-      .sortBy(_._1).toMap
-    val current = (jsons.keySet ++ checkpointRefFor(conf, path).map(_.version)).maxOption
-      .getOrElse(throw new IllegalArgumentException(s"empty Delta log at $dir"))
-    require(versionAsOf <= current,
-      s"versionAsOf $versionAsOf exceeds the current version $current of $path")
-    val st = new ReplayState(path)
-    val ckpt = checkpointRefFor(conf, path, versionAsOf)
-    // plan-based replay: compacted spans usable wherever they fit the
-    // target (mid-span versions still need the individual JSONs)
-    val plan: Seq[Path] =
-      replayPlan(fs, path, jsons, 0L, versionAsOf) match {
-        case Some(p) => p
-        case None => ckpt match {
-          case Some(ref) =>
-            replayPlan(fs, path, jsons, ref.version + 1, versionAsOf) match {
-              case Some(tailP) =>
-                seedCheckpoint(spark, path, ref, st)
-                tailP
-              case None => throw new IllegalArgumentException(
-                s"version $versionAsOf of $path is not reconstructable: JSON log covers " +
-                  s"[${jsons.keySet.minOption.getOrElse(-1L)}, ${jsons.keySet.maxOption.getOrElse(-1L)}]" +
-                  s", checkpoint at ${ref.version} (cleanupLog truncated past it)")
-            }
-          case _ =>
-            throw new IllegalArgumentException(
-              s"version $versionAsOf of $path is not reconstructable: JSON log covers " +
-                s"[${jsons.keySet.minOption.getOrElse(-1L)}, ${jsons.keySet.maxOption.getOrElse(-1L)}]" +
-                ", no checkpoint (cleanupLog truncated past it)")
-        }
-      }
-    plan.foreach(p => applyJsonCommit(fs, p, st))
-    st.toSnapshot(versionAsOf)
+    logState(spark, path, Some(versionAsOf)).snapshot(_ => true)
   }
 
   /** Read the table AS OF a version — the files that were live then,
@@ -1400,12 +1328,42 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     val dir = logDir(path)
     val fs = dir.getFileSystem(conf)
     require(fs.exists(dir), s"no Delta table at $path (no _delta_log)")
-    val live = fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.matches("\\d{20}\\.json"))
-      .map(s => s.getPath.getName.stripSuffix(".json").toLong -> s.getPath)
+    val live = listJsonCommits(fs, path)
       .map { case (v, p) => v -> commitInfoOf(fs, p) }
     (readHistorySidecar(fs, path).toMap ++ live.toMap).toSeq
       .sortBy(-_._1)
       .map { case (v, (op, ts)) => (v, op, ts) }
+  }
+}
+
+/** One replay of a Delta log ([[DeltaCheckpointOps.logState]]): the
+  * small state (`small.files` is empty), the checkpoint the replay
+  * seeded from, that checkpoint's flat add rows minus every path the
+  * JSON tail touched, and the tail's net adds (a young log's whole
+  * file list). */
+private[stac] final case class LogState(
+    small: PortableDelta.Snapshot,
+    checkpoint: Option[PortableDelta.CheckpointRef],
+    ckptAdds: Option[DataFrame],
+    tailAdds: Seq[PortableDelta.AddFile]) {
+
+  /** The live files `keep` admits — the one file-state accessor. A
+    * young log filters on the driver and launches no Spark job; a
+    * checkpointed one runs `keep` on executors over the checkpoint rows
+    * and collects only the survivors. */
+  def files(keep: PortableDelta.AddFile => Boolean): Seq[PortableDelta.AddFile] =
+    ckptAdds.fold(Seq.empty[PortableDelta.AddFile]) { df =>
+      df.filter((r: org.apache.spark.sql.Row) => keep(PortableDelta.rowToAddFile(r)))
+        .collect().map(PortableDelta.rowToAddFile).toSeq
+    } ++ tailAdds.filter(keep)
+
+  def snapshot(keep: PortableDelta.AddFile => Boolean): PortableDelta.Snapshot =
+    small.copy(files = files(keep))
+
+  /** Every live add as one flat frame ([[DeltaCheckpointOps.FlatAddSchema]]) —
+    * for consumers that stay distributed. */
+  def addsDf(spark: SparkSession): DataFrame = {
+    val tail = PortableDelta.addFilesToFlatDf(spark, tailAdds)
+    ckptAdds.fold(tail)(c => if (tailAdds.isEmpty) c else c.unionByName(tail))
   }
 }

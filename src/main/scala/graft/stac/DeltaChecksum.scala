@@ -216,27 +216,30 @@ private[stac] trait DeltaChecksumOps extends Serializable { self: PortableDelta.
     * anyway — one extra distributed aggregate, never a driver add
     * list. */
   private[stac] def reseedChecksum(conf: Configuration, path: String,
-                             version: Long, st: ReplayState,
-                             adds: DataFrame, nAdds: Long): Unit =
+                             snap: Snapshot, adds: DataFrame, nAdds: Long): Unit =
     try {
       import org.apache.spark.sql.functions.{coalesce, lit, sum}
       val bytes = adds.agg(coalesce(sum("size"), lit(0L))).head.getLong(0)
-      val txnsOut =
-        if (st.txns.size <= 100) Some(st.txns.toMap) else None
-      writeChecksumFile(conf, path,
-        TableChecksum(version, bytes, nAdds,
-          metaDataNodeOf(st.tableId, st.schemaJson, st.configuration,
-            st.partitionCols),
-          protocolNodeOf(st.readerV, st.writerV, st.readerFeatures,
-            st.writerFeatures),
-          txnsOut, st.txnTimes.toMap, st.domains.toMap, None),
+      writeChecksumFile(conf, path, checksumOf(snap, nAdds, bytes),
         overwrite = true)
       ()
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[portable-delta] checksum re-seed at $path " +
-          s"v$version failed (checkpoint is durable): ${e.getMessage}")
+          s"v${snap.version} failed (checkpoint is durable): ${e.getMessage}")
     }
+
+  /** The version checksum of `snap`'s small state with the given file
+    * count and byte total (txns inline up to 100 appIds). */
+  private[stac] def checksumOf(snap: Snapshot, nFiles: Long,
+                               bytes: Long): TableChecksum =
+    TableChecksum(snap.version, bytes, nFiles,
+      metaDataNodeOf(snap.tableId, snap.schema.json, snap.configuration,
+        snap.partitionColumns),
+      protocolNodeOf(snap.minReaderVersion, snap.minWriterVersion,
+        snap.readerFeatures, snap.writerFeatures),
+      if (snap.txns.size <= 100) Some(snap.txns) else None,
+      snap.txnLastUpdated, snap.domainMetadata, None)
 
   /** DESCRIBE TABLE DETAIL analog: identity, layout (partition +
     * clustering dimensions), size, properties, and the protocol
@@ -283,14 +286,7 @@ private[stac] trait DeltaChecksumOps extends Serializable { self: PortableDelta.
     val conf = spark.sessionState.newHadoopConf()
     val (snap, nFiles, bytes, fromCrc) = statsState(spark, path, crcOk = true)
     if (!fromCrc)
-      writeChecksumFile(conf, path,
-        TableChecksum(snap.version, bytes, nFiles,
-          metaDataNodeOf(snap.tableId, snap.schema.json, snap.configuration,
-            snap.partitionColumns),
-          protocolNodeOf(snap.minReaderVersion, snap.minWriterVersion,
-            snap.readerFeatures, snap.writerFeatures),
-          if (snap.txns.size <= 100) Some(snap.txns) else None,
-          snap.txnLastUpdated, snap.domainMetadata, None),
+      writeChecksumFile(conf, path, checksumOf(snap, nFiles, bytes),
         overwrite = false)
     TableStats(snap.version, nFiles, bytes)
   }
@@ -301,27 +297,15 @@ private[stac] trait DeltaChecksumOps extends Serializable { self: PortableDelta.
   private[stac] def statsState(spark: SparkSession, path: String,
                          crcOk: Boolean): (Snapshot, Long, Long, Boolean) = {
     val conf = spark.sessionState.newHadoopConf()
-    checkpointRefFor(conf, path) match {
-      case Some(ref) =>
-        val (snapBase, addsDf) = lazyCheckpointState(spark, path, ref)
-        readChecksum(conf, path, snapBase.version) match {
-          case Some(cs) if crcOk =>
-            (snapBase, cs.numFiles, cs.tableSizeBytes, true)
-          case _ =>
-            import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
-            val r = addsDf
-              .agg(count(lit(1)), coalesce(sum("size"), lit(0L))).head
-            (snapBase, r.getLong(0), r.getLong(1), false)
-        }
-      case None =>
-        val snap = snapshot(conf, path)
-        val small = snap.copy(files = Nil)
-        readChecksum(conf, path, snap.version) match {
-          case Some(cs) if crcOk =>
-            (small, cs.numFiles, cs.tableSizeBytes, true)
-          case _ =>
-            (small, snap.files.size.toLong, snap.files.map(_.size).sum, false)
-        }
+    val ls = logState(spark, path, None)
+    readChecksum(conf, path, ls.small.version) match {
+      case Some(cs) if crcOk =>
+        (ls.small, cs.numFiles, cs.tableSizeBytes, true)
+      case _ =>
+        import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
+        val r = ls.addsDf(spark)
+          .agg(count(lit(1)), coalesce(sum("size"), lit(0L))).head
+        (ls.small, r.getLong(0), r.getLong(1), false)
     }
   }
 
@@ -356,14 +340,8 @@ private[stac] trait DeltaChecksumOps extends Serializable { self: PortableDelta.
     *     read through [[readTable]] instead. */
   def aggregateFromStats(spark: SparkSession, path: String,
                          minMaxCols: Seq[String] = Nil): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val (snapBase, addsDf) = checkpointRefFor(conf, path) match {
-      case Some(ref) => lazyCheckpointState(spark, path, ref)
-      case None =>
-        val snap = snapshot(conf, path)
-        (snap.copy(files = Nil), addFilesToFlatDf(spark, snap.files))
-    }
-    aggregateFromState(spark, path, snapBase, addsDf, minMaxCols)
+    val ls = logState(spark, path, None)
+    aggregateFromState(spark, path, ls.small, ls.addsDf(spark), minMaxCols)
   }
 
   /** [[aggregateFromStats]] over PINNED state — the seam the implicit

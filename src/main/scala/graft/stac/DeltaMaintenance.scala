@@ -41,7 +41,8 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
     // the vacuumProtocolCheck contract: validate the table's protocol
     // (both sides) BEFORE reclaiming anything — an unknown feature may
     // reference files through actions this engine cannot see
-    val small = smallSnapshot(spark, path)
+    val ls = logState(spark, path, None)
+    val small = ls.small
     requireWritable(small, path)
     val grace =
       if (graceMillis >= 0) graceMillis
@@ -49,7 +50,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
         .flatMap(parseInterval).getOrElse(7L * 24 * 3600 * 1000)
     val s2 = spark; import s2.implicits._
     val tablePath = path
-    val referencedDs = referencedRefsDs(spark, path)
+    val referencedDs = referencedRefsDs(spark, path, ls.checkpoint)
     val cutoff = System.currentTimeMillis() - grace
     // listing frame: the driver lists only the root's IMMEDIATE
     // children; every in-scope subdirectory (hive col=value/ trees)
@@ -126,11 +127,8 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
 
   /** The reference strings of every ADD action in one log JSON. */
   private[stac] def jsonAddRefs(fs: org.apache.hadoop.fs.FileSystem,
-                          tablePath: String, p: Path): Seq[String] = {
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    lines.filter(_.nonEmpty).map(mapper.readTree).flatMap { n =>
+                          tablePath: String, p: Path): Seq[String] =
+    jsonActions(fs, p).flatMap { n =>
       if (!n.has("add")) Nil
       else {
         val f = parseAddNode(n.get("add"))
@@ -139,39 +137,34 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
           f.dv.map(_.pathOrInlineDv).getOrElse(""))
       }
     }
-  }
 
   /** The referenced frame both vacuum shapes share: the add paths (and
-    * their DV packs) of every reconstructable version — a DATAFRAME
-    * end-to-end on checkpointed tables (the checkpoint's add rows
-    * expand to refs on EXECUTORS; only the bounded JSON tail parses on
-    * the driver), so the referenced set of a million-file table never
-    * materializes driver-side. Pre-checkpoint logs are young: driver
-    * parse, small. */
-  private[stac] def referencedRefsDs(spark: SparkSession, path: String)
+    * their DV packs) of every reconstructable version — every add the
+    * replay's seed checkpoint (`seed`, from [[logState]]) holds plus
+    * every add in the JSON commits after it (all of them on a young
+    * log). A DATAFRAME end-to-end on checkpointed tables (the
+    * checkpoint's add rows expand to refs on EXECUTORS; only the
+    * bounded JSON tail parses on the driver), so the referenced set of
+    * a million-file table never materializes driver-side. */
+  private[stac] def referencedRefsDs(spark: SparkSession, path: String,
+                                     seed: Option[CheckpointRef])
       : org.apache.spark.sql.Dataset[String] = {
     import org.apache.spark.sql.functions.col
     val s2 = spark; import s2.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(path).getFileSystem(conf)
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val tablePath = path
-    lastCheckpointRef(conf, path) match {
-      case None =>
-        val versioned = fs.listStatus(logDir(path)).toSeq
-          .filter(st => st.isFile && st.getPath.getName.matches("\\d{20}\\.json"))
-          .map(_.getPath)
-        versioned.flatMap(jsonAddRefs(fs, tablePath, _)).toDS()
-      case Some(ref) =>
-        val ckRefs = ckptAddsFlatDf(spark, path, ref)
-          .select(col("path"), col("dv_storageType"), col("dv_pathOrInlineDv"))
-          .as[(String, String, String)]
-          .flatMap { case (p, st, dv) =>
-            fileActionRefs(tablePath)(p, Option(st).getOrElse(""),
-              Option(dv).getOrElse(""))
-          }
-        val tailRefs = tailCommits(fs, path, ref.version)
-          .flatMap { case (_, p) => jsonAddRefs(fs, tablePath, p) }
-        ckRefs.union(tailRefs.toDS())
+    val after = seed.fold(-1L)(_.version)
+    val jsonRefs = listJsonCommits(fs, path).collect {
+      case (v, p) if v > after => jsonAddRefs(fs, tablePath, p)
+    }.flatten.toDS()
+    seed.fold(jsonRefs) { ref =>
+      ckptAddsFlatDf(spark, path, ckptRawDf(spark, path, ref))
+        .select(col("path"), col("dv_storageType"), col("dv_pathOrInlineDv"))
+        .as[(String, String, String)]
+        .flatMap { case (p, st, dv) =>
+          fileActionRefs(tablePath)(p, Option(st).getOrElse(""),
+            Option(dv).getOrElse(""))
+        }.union(jsonRefs)
     }
   }
 
@@ -194,7 +187,8 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
                  graceMillis: Long = -1L): Int = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(path).getFileSystem(conf)
-    val small = smallSnapshot(spark, path)
+    val ls = logState(spark, path, None)
+    val small = ls.small
     requireWritable(small, path)
     val grace =
       if (graceMillis >= 0) graceMillis
@@ -207,15 +201,12 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
     // (a re-removed path after RESTORE must carry its newest timestamp)
     val logFiles = fs.listStatus(logDir(path)).toSeq.filter(_.isFile)
       .map(_.getPath).filter { p =>
-        p.getName.matches("\\d{20}\\.json") ||
+        isCommitJson(p.getName) ||
           p.getName.matches("\\d{20}\\.\\d{20}\\.compacted\\.json")
       }
     val removes = scala.collection.mutable.HashMap.empty[String, (Long, Seq[String])]
     logFiles.foreach { p =>
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
+      jsonActions(fs, p).foreach { n =>
         if (n.has("remove")) {
           val r = n.get("remove")
           val rel = r.get("path").asText()
@@ -233,25 +224,23 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
     // already truncated — [[checkpoint]] retains unexpired ones): the
     // candidate set stays bounded by the retention window, and only
     // the expired slice ever reaches the driver
-    val ckptExpired: Seq[String] = lastCheckpointRef(conf, path) match {
-      case None => Nil
-      case Some(ref) =>
-        import org.apache.spark.sql.functions.col
-        ckptRemovesFlatDf(spark, path, ref)
-          .where(col("deletionTimestamp") <= cutoff)
-          .select(col("path"), col("dv_storageType"), col("dv_pathOrInlineDv"))
-          .collect().toSeq.flatMap { r =>
-            fileActionRefs(tablePath)(r.getString(0),
-              Option(r.getString(1)).getOrElse(""),
-              Option(r.getString(2)).getOrElse(""))
-          }
+    val ckptExpired: Seq[String] = ls.checkpoint.toSeq.flatMap { ref =>
+      import org.apache.spark.sql.functions.col
+      ckptRemovesFlatDf(spark, path, ckptRawDf(spark, path, ref))
+        .where(col("deletionTimestamp") <= cutoff)
+        .select(col("path"), col("dv_storageType"), col("dv_pathOrInlineDv"))
+        .collect().toSeq.flatMap { r =>
+          fileActionRefs(tablePath)(r.getString(0),
+            Option(r.getString(1)).getOrElse(""),
+            Option(r.getString(2)).getOrElse(""))
+        }
     }
     val expired: Seq[String] = (removes.toSeq
       .filter(_._2._1 <= cutoff).flatMap(_._2._2) ++ ckptExpired).distinct
     if (expired.isEmpty) return 0
     // protection = the full vacuum's referenced frame; only the (small)
     // intersection with the candidate set ever reaches the driver
-    val protectedHits = referencedRefsDs(spark, path).toDF("rel")
+    val protectedHits = referencedRefsDs(spark, path, ls.checkpoint).toDF("rel")
       .join(expired.toDF("rel"), Seq("rel"), "left_semi")
       .as[String].collect().toSet
     val reclaim = expired.filterNot(protectedHits)
@@ -298,13 +287,9 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
     }
     var attempt = 0
     while (true) {
-      val snap = narrowedSnapshot(spark, path,
-        (_, df) => df.filter { (r: org.apache.spark.sql.Row) =>
-          broken(r.getString(0), Option(r.getString(3)).getOrElse(""),
-            Option(r.getString(4)).getOrElse("")) },
-        s => s.files.filter(f => broken(f.path,
-          f.dv.map(_.storageType).getOrElse(""),
-          f.dv.map(_.pathOrInlineDv).getOrElse(""))))
+      val snap = logState(spark, path, None).snapshot(f => broken(f.path,
+        f.dv.map(_.storageType).getOrElse(""),
+        f.dv.map(_.pathOrInlineDv).getOrElse("")))
       requireWritable(snap, path)
       val victims = snap.files
       if (victims.isEmpty || dryRun) return victims.map(_.path)
@@ -346,11 +331,11 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
   def generateSymlinkManifest(spark: SparkSession, path: String): Seq[String] = {
     import org.apache.spark.sql.functions.col
     val conf = spark.sessionState.newHadoopConf()
-    val small = smallSnapshot(spark, path)
-    require(!mappedCfg(small.configuration),
+    val ls = logState(spark, path, None)
+    require(!mappedCfg(ls.small.configuration),
       s"cannot generate symlink manifests for $path: column mapping is " +
         "active — external Hive-style readers cannot resolve physical names")
-    val snap = narrowedSnapshot(spark, path, (_, df) => df, s => s.files)
+    val snap = ls.snapshot(_ => true)
     val withDv = snap.files.count(_.dv.isDefined)
     require(withDv == 0,
       s"cannot generate symlink manifests for $path: $withDv live file(s) " +
@@ -422,38 +407,15 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
                       where: Option[org.apache.spark.sql.Column] = None)
       : OptimizeStats = {
     require(targetFileBytes > 0)
-    // victim selection narrows on the FLAT ADD FRAME (size / dv columns
-    // + the WHERE scope) before anything collects: a compaction of a
+    // victim selection narrows on the live-file predicate (size / dv +
+    // the WHERE scope) before anything collects: a compaction of a
     // million-file table brings only the in-scope small-or-tombstoned
     // files to the driver
     val snap = {
-      import org.apache.spark.sql.functions.col
-      narrowedSnapshot(spark, path,
-        (schema, df) => {
-          val base = df.filter(col("size") < targetFileBytes ||
-            col("dv_storageType").isNotNull)
-          where match {
-            case None => base
-            case Some(c) =>
-              val pred = DeltaStats.resolvePredicate(spark, schema, c)
-              base.filter { (r: org.apache.spark.sql.Row) =>
-                val pv = if (r.isNullAt(9)) Map.empty[String, String]
-                         else r.getMap[String, String](9).toMap
-                DeltaStats.satisfiable(Option(r.getString(8)), pv, schema, pred)
-              }
-          }
-        },
-        s => {
-          val base = s.files.filter(f =>
-            f.size < targetFileBytes || f.dv.isDefined)
-          where match {
-            case None => base
-            case Some(c) =>
-              val pred = DeltaStats.resolvePredicate(spark, s.schema, c)
-              base.filter(f => DeltaStats.satisfiable(f.stats,
-                f.partitionValues, s.schema, pred))
-          }
-        })
+      val ls = logState(spark, path, None)
+      val inScope = where.fold((_: AddFile) => true)(
+        statsKeep(spark, ls.small.schema, _))
+      ls.snapshot(f => (f.size < targetFileBytes || f.dv.isDefined) && inScope(f))
     }
     requireWritable(snap, path)
     val victims = snap.files
@@ -605,10 +567,8 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
       maxRetries: Int = 10): OptimizeStats = {
     import org.apache.spark.sql.functions.col
     require(targetFileBytes > 0)
-    // victim selection on the flat add frame: provider-less files only
-    val snap = narrowedSnapshot(spark, path,
-      (_, df) => df.filter(col("clusteringProvider").isNull),
-      s => s.files.filter(_.clusteringProvider.isEmpty))
+    // victim selection: provider-less files only
+    val snap = logState(spark, path, None).snapshot(_.clusteringProvider.isEmpty)
     requireWritable(snap, path)
     val domainJson = snap.domainMetadata.getOrElse("delta.clustering",
       throw new IllegalArgumentException(
@@ -661,18 +621,12 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
                  maxRetries: Int = 10): OptimizeStats = {
     import org.apache.spark.sql.functions.col
     require(targetFileBytes > 0)
+    val ls = logState(spark, path, None)
     val snap =
-      if (!purgeDroppedColumns)
-        narrowedSnapshot(spark, path,
-          (_, df) => df.filter(col("dv_storageType").isNotNull),
-          s => s.files.filter(_.dv.isDefined))
+      if (!purgeDroppedColumns) ls.snapshot(_.dv.isDefined)
       else {
-        val small = smallSnapshot(spark, path)
-        val staleBytes = staleBytesProbe(spark, path, small)
-        narrowedSnapshot(spark, path,
-          (_, df) => df.filter { (r: org.apache.spark.sql.Row) =>
-            !r.isNullAt(3) || staleBytes(r.getString(0)) },
-          s => s.files.filter(f => f.dv.isDefined || staleBytes(f.path)))
+        val staleBytes = staleBytesProbe(spark, path, ls.small)
+        ls.snapshot(f => f.dv.isDefined || staleBytes(f.path))
       }
     requireWritable(snap, path)
     val victims = snap.files
@@ -857,10 +811,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
     var cfg: Option[Map[String, String]] = None
     var protoHasFeature = false
     tailCommits(fs, path, cv).foreach { case (_, p) =>
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
+      jsonActions(fs, p).foreach { n =>
         if (n.has("metaData")) {
           val c = Option(n.get("metaData").get("configuration"))
             .filterNot(_.isNull).map(_.properties().asScala
@@ -882,8 +833,8 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
   /** JSON fragment recording the protection boundary in
     * `_last_checkpoint` (empty when unprotected) — see
     * [[lastCheckpointProtectionHint]]. */
-  private[stac] def protectionHintJson(st: ReplayState): String =
-    protectionBoundary(st.configuration)
+  private[stac] def protectionHintJson(cfg: Map[String, String]): String =
+    protectionBoundary(cfg)
       .map(b => s""","$CheckpointProtectionProp":$b""").getOrElse("")
 
   /** Engine-less protection evidence from the newest VERSION CHECKSUM at
@@ -1084,7 +1035,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
         val keepAfter = retainMillis.map(System.currentTimeMillis() - _)
         val old = fs.listStatus(dir).toSeq
           .map(_.getPath)
-          .filter(p => p.getName.matches("\\d{20}\\.json") &&
+          .filter(p => isCommitJson(p.getName) &&
             p.getName.stripSuffix(".json").toLong <= cv)
           .filter(p => keepAfter.forall(cut => commitInfoOf(fs, p)._2 < cut))
           .sortBy(_.getName)
@@ -1117,10 +1068,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
         // the same out-of-root line Delta's vacuum draws.
         val rootQ = fs.makeQualified(new Path(path)).toString + "/"
         val cdcGone = old.flatMap { p =>
-          val in = fs.open(p)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().toList finally in.close()
-          lines.filter(_.nonEmpty).map(mapper.readTree)
+          jsonActions(fs, p)
             .filter(_.has("cdc")).map(_.get("cdc").get("path").asText())
         }.map(rel => resolvedDataPath(path, rel))
           .filter(rp => fs.makeQualified(rp).toString.startsWith(rootQ))
@@ -1180,7 +1128,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
         // seed only version v itself — dropping it is the same documented
         // window shrink cleanupLog inflicts.
         val jsonVs: Set[Long] = listing
-          .filter(_.getName.matches("\\d{20}\\.json"))
+          .filter(p => isCommitJson(p.getName))
           .map(_.getName.stripSuffix(".json").toLong).toSet
         val contiguousMax: Long =
           if (!jsonVs.contains(0L)) -1L
@@ -1250,10 +1198,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
     val sc = historySidecar(path)
     if (!fs.exists(sc)) Nil
     else {
-      val in = fs.open(sc)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).map { n =>
+      jsonActions(fs, sc).map { n =>
         n.get("version").asLong() ->
           (Option(n.get("operation")).map(_.asText()).getOrElse(""),
             Option(n.get("timestamp")).map(_.asLong()).getOrElse(0L))
@@ -1409,10 +1354,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
   /** The commitInfo (operation, timestamp) of one JSON commit file. */
   private[stac] def commitInfoOf(fs: org.apache.hadoop.fs.FileSystem,
                            p: Path): (String, Long) = {
-    val in = fs.open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val ci = lines.filter(_.nonEmpty).map(mapper.readTree)
+    val ci = jsonActions(fs, p)
       .find(_.has("commitInfo")).map(_.get("commitInfo"))
     // inCommitTimestamps (writer feature): when a commitInfo carries
     // `inCommitTimestamp`, THAT is the commit's authoritative time (the

@@ -19,8 +19,8 @@ import scala.jdk.CollectionConverters._
   * This writer emits real Delta tables — `protocol` (1/2), `metaData`
   * (Spark schema JSON, table properties), `add`/`remove` actions with
   * filesystem-true sizes — that any Delta reader (delta-spark,
-  * delta-rs, DuckDB delta) can load; [[DeltaSinkSpec]] cross-checks the
-  * layout with delta-spark wherever that jar exists. Data files are
+  * delta-rs, DuckDB delta) can load; PortableDeltaSpec checks the
+  * emitted bytes against the protocol. Data files are
   * written through the normal Spark parquet committer (born with the
   * geo footer via [[GeoParquetFileFormat]] on the STAC face), so the
   * 100-TB write path is the stock distributed one; only the O(files)
@@ -713,17 +713,12 @@ object PortableDelta
     currentSnapshot(conf, path).getOrElse(
       throw new IllegalArgumentException(s"no Delta table at $path (no _delta_log)"))
 
-  /** Checkpoint-aware replay: start from `_last_checkpoint`'s parquet
-    * state when present (single-file or the spec's multi-part
-    * `<v>.checkpoint.<i>.<n>.parquet` layout external writers produce),
-    * then apply the JSON commits after it. */
-  def snapshot(spark: SparkSession, path: String): Snapshot = {
-    val conf = spark.sessionState.newHadoopConf()
-    checkpointRefFor(conf, path) match {
-      case None => snapshot(conf, path)
-      case Some(ref) => checkpointSnapshot(spark, path, ref)
-    }
-  }
+  /** Checkpoint-aware replay ([[logState]]): start from the newest
+    * checkpoint's parquet state when one exists (single-file, the
+    * spec's multi-part `<v>.checkpoint.<i>.<n>.parquet` layout, or v2
+    * with sidecars), then apply the JSON commits after it. */
+  def snapshot(spark: SparkSession, path: String): Snapshot =
+    logState(spark, path, None).snapshot(_ => true)
 
   /** Read the table's CURRENT version: exactly the log's live files with
     * the logged schema — files on disk but removed (or never committed)
@@ -741,10 +736,16 @@ object PortableDelta
     * filter. */
   def statsPrune(spark: SparkSession, snap: Snapshot,
                  condition: org.apache.spark.sql.Column): (Seq[AddFile], Int) = {
-    val pred = DeltaStats.resolvePredicate(spark, snap.schema, condition)
-    val kept = snap.files.filter(f =>
-      DeltaStats.satisfiable(f.stats, f.partitionValues, snap.schema, pred))
+    val kept = snap.files.filter(statsKeep(spark, snap.schema, condition))
     (kept, snap.files.size - kept.size)
+  }
+
+  /** The data-skipping predicate: could a file with these logged stats
+    * and partition values hold a row matching `condition`? */
+  private[stac] def statsKeep(spark: SparkSession, schema: StructType,
+                              condition: org.apache.spark.sql.Column): AddFile => Boolean = {
+    val pred = DeltaStats.resolvePredicate(spark, schema, condition)
+    f => DeltaStats.satisfiable(f.stats, f.partitionValues, schema, pred)
   }
 
   /** Read the current version with `condition` applied, DATA-SKIPPING
@@ -761,128 +762,29 @@ object PortableDelta
     * driver O(matching files + JSON tail), not O(table). */
   def readTableWhere(spark: SparkSession, path: String,
                      condition: org.apache.spark.sql.Column): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    checkpointRefFor(conf, path) match {
-      case Some(ref) =>
-        val (snapBase, addsDf) = lazyCheckpointState(spark, path, ref)
-        val schema = snapBase.schema
-        val pred = DeltaStats.resolvePredicate(spark, schema, condition)
-        val kept = addsDf.filter { (r: org.apache.spark.sql.Row) =>
-          val pv = if (r.isNullAt(9)) Map.empty[String, String]
-                   else r.getMap[String, String](9).toMap
-          DeltaStats.satisfiable(Option(r.getString(8)), pv, schema, pred)
-        }.collect().map(rowToAddFile).toSeq
-        snapshotDf(spark, path, snapBase.copy(files = kept)).filter(condition)
-      case None =>
-        val snap = snapshot(spark, path)
-        val (kept, _) = statsPrune(spark, snap, condition)
-        snapshotDf(spark, path, snap.copy(files = kept)).filter(condition)
-    }
-  }
-
-  /** Checkpoint-seeded state WITHOUT materializing the add list: the
-    * small state (protocol/metaData/txns, replayed through the JSON
-    * tail) plus the FULL live add set as a DataFrame — the checkpoint's
-    * add rows minus tail-touched paths, unioned with the tail's own net
-    * adds. Driver memory is O(small state + tail commits), never
-    * O(table files); consumers narrow the frame (stats pruning, scan
-    * construction) before anything collects. */
-  private[stac] def lazyCheckpointState(spark: SparkSession, path: String,
-                                  ref: CheckpointRef,
-                                  maxVersion: Long = Long.MaxValue): (Snapshot, DataFrame) = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = logDir(path).getFileSystem(conf)
-    val st = new ReplayState(path)
-    seedCheckpointSmall(spark, path, ref, st)
-    val cv = ref.version
-    val tail = listJsonCommits(fs, path)
-      .filter(p => p._1 > cv && p._1 <= maxVersion)
-    require(tail.map(_._1) == (cv + 1 to cv + tail.size),
-      s"non-contiguous Delta log after checkpoint $cv: ${tail.map(_._1).mkString(",")}")
-    // the tail is replayed into the (checkpoint-add-free) ReplayState:
-    // st.live ends as the tail's NET adds; `touched` marks every path
-    // the tail re-stated or removed, which must override checkpoint rows
-    val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-    tail.foreach { case (_, p) =>
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toList finally in.close()
-      lines.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("add")) touched += node.get("add").get("path").asText()
-        if (node.has("remove")) touched += node.get("remove").get("path").asText()
-        st.applyJson(node)
-      }
-    }
-    val tailAdds = st.live.values.toSeq
-    val snapBase = st.toSnapshot(cv + tail.size).copy(files = Nil)
-    val ckpt = ckptAddsFlatDf(spark, path, ref)
-    import org.apache.spark.sql.functions.col
-    val untouchedCkpt =
-      if (touched.isEmpty) ckpt
-      else ckpt.filter(!col("path").isInCollection(touched.toSeq))
-    val addsDf =
-      if (tailAdds.isEmpty) untouchedCkpt
-      else untouchedCkpt.unionByName(addFilesToFlatDf(spark, tailAdds))
-    (snapBase, addsDf)
-  }
-
-  /** Snapshot whose FILE LIST is narrowed BEFORE it reaches the driver —
-    * the DML-verb seam. On a checkpoint-seeded table the add state stays
-    * a DataFrame: `narrowDf` filters the flat add rows on EXECUTORS and
-    * only the survivors — the files the verb must touch anyway — are
-    * collected, so a DML against a million-add checkpoint costs the
-    * driver O(touched files + JSON tail), never O(table). Pre-checkpoint
-    * logs replay their (bounded, young) JSON with `narrowFiles`. */
-  private[stac] def narrowedSnapshot(spark: SparkSession, path: String,
-      narrowDf: (StructType, DataFrame) => DataFrame,
-      narrowFiles: Snapshot => Seq[AddFile]): Snapshot = {
-    val conf = spark.sessionState.newHadoopConf()
-    checkpointRefFor(conf, path) match {
-      case Some(ref) =>
-        val (snapBase, addsDf) = lazyCheckpointState(spark, path, ref)
-        snapBase.copy(files =
-          narrowDf(snapBase.schema, addsDf).collect().map(rowToAddFile).toSeq)
-      case None =>
-        val snap = snapshot(conf, path)
-        snap.copy(files = narrowFiles(snap))
-    }
+    val ls = logState(spark, path, None)
+    snapshotDf(spark, path,
+      ls.snapshot(statsKeep(spark, ls.small.schema, condition))).filter(condition)
   }
 
   /** The DML snapshot: file list narrowed to the files `condition`
     * could possibly touch (stats-based skipping, conservative — files
-    * without stats or under unsupported predicate shapes are kept).
-    * None keeps every live file but still routes checkpoint-seeded
-    * state through the DataFrame path. */
+    * without stats or under unsupported predicate shapes are kept). On
+    * a checkpointed table the narrowing runs on executors, so a DML
+    * against a million-add checkpoint collects O(touched files). */
   private[stac] def dmlSnapshot(spark: SparkSession, path: String,
-      condition: Option[org.apache.spark.sql.Column]): Snapshot =
-    narrowedSnapshot(spark, path,
-      (schema, df) => condition match {
-        case None => df
-        case Some(c) =>
-          val pred = DeltaStats.resolvePredicate(spark, schema, c)
-          df.filter { (r: org.apache.spark.sql.Row) =>
-            val pv = if (r.isNullAt(9)) Map.empty[String, String]
-                     else r.getMap[String, String](9).toMap
-            DeltaStats.satisfiable(Option(r.getString(8)), pv, schema, pred)
-          }
-      },
-      snap => condition match {
-        case None => snap.files
-        case Some(c) => statsPrune(spark, snap, c)._1
-      })
+      condition: Option[org.apache.spark.sql.Column]): Snapshot = {
+    val ls = logState(spark, path, None)
+    ls.snapshot(condition.fold((_: AddFile) => true)(
+      statsKeep(spark, ls.small.schema, _)))
+  }
 
   /** Current snapshot WITHOUT file state (`files = Nil`) — protocol/
     * metaData/txns/domainMetadata only, O(small state + tail) driver
     * cost on checkpoint-seeded tables. For schema/config gates that
     * never need the add list. */
-  private[graft] def smallSnapshot(spark: SparkSession, path: String): Snapshot = {
-    val conf = spark.sessionState.newHadoopConf()
-    checkpointRefFor(conf, path) match {
-      case Some(ref) => lazyCheckpointState(spark, path, ref)._1
-      case None => snapshot(conf, path).copy(files = Nil)
-    }
-  }
+  private[graft] def smallSnapshot(spark: SparkSession, path: String): Snapshot =
+    logState(spark, path, None).small
 
   /** The table's current version — a SMALL-state read (protocol/
     * metaData/tail only, never the add list): the poll a streaming
@@ -1952,10 +1854,7 @@ object PortableDelta
     val dir = logDir(path)
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return None
-    val versioned = fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("\\d{20}\\.json"))
-      .map(st => st.getPath.getName.stripSuffix(".json").toLong -> st.getPath)
-      .sortBy(_._1)
+    val versioned = listJsonCommits(fs, path)
     val jsons = versioned.toMap
     val spanEnds = compactedSpans(fs, path).values.flatten.map(_._1)
     val truncated = " — this log is checkpoint-truncated; use snapshot(spark, path)"

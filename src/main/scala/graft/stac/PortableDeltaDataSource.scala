@@ -36,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * file skipping happens at PLANNING time from metadata alone.
   *
   * Scale shape: on a checkpoint-seeded table the add state stays a
-  * DataFrame end-to-end ([[PortableDelta.lazyCheckpointState]]) —
+  * DataFrame end-to-end ([[PortableDelta.logState]]) —
   * stats pruning runs on EXECUTORS over the checkpoint's add rows and
   * only the SURVIVING files (the ones the scan must name anyway) reach
   * the driver, the readTableWhere discipline. A million-add table
@@ -641,9 +641,8 @@ object PortableDeltaRelation {
     * commits after this point are invisible to the relation (standard
     * Delta snapshot-isolation read semantics). Time travel via the
     * `versionAsOf` / `timestampAsOf` options (the delta-spark names):
-    * the pinned state replays to that version ([[PortableDelta
-    * .snapshotAt]] — file list materialized like the readTable(version)
-    * API, the bounded-age-history trade documented there). */
+    * the same replay, pinned to that version ([[PortableDelta.logState]]
+    * with `asOf`). */
   def apply(spark: SparkSession, tablePath: String,
             options: Map[String, String]): BaseRelation = {
     // Spark hands V1 providers a CaseInsensitiveMap; direct API callers
@@ -666,21 +665,8 @@ object PortableDeltaRelation {
       "specify versionAsOf OR timestampAsOf, not both")
     val asOf: Option[Long] = vOpt.orElse(
       tsOpt.map(PortableDelta.versionAtTimestamp(conf, tablePath, _)))
-    val (snapBase, addsDf) = asOf match {
-      case Some(v) =>
-        val snap = PortableDelta.snapshotAt(spark, tablePath, v)
-        (snap.copy(files = Nil),
-          PortableDelta.addFilesToFlatDf(spark, snap.files))
-      case None =>
-        PortableDelta.checkpointRefFor(conf, tablePath) match {
-          case Some(ref) =>
-            PortableDelta.lazyCheckpointState(spark, tablePath, ref)
-          case None =>
-            val snap = PortableDelta.snapshot(conf, tablePath)
-            (snap.copy(files = Nil),
-              PortableDelta.addFilesToFlatDf(spark, snap.files))
-        }
-      }
+    val ls = PortableDelta.logState(spark, tablePath, asOf)
+    val (snapBase, addsDf) = (ls.small, ls.addsDf(spark))
     val index = new PortableDeltaFileIndex(spark, tablePath, snapBase, addsDf)
     // nullable-on-read, the readTable contract: parquet bytes relax
     // struct-field nullability and evolved tables surface null for

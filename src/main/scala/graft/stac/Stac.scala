@@ -48,11 +48,14 @@ object Stac {
                               schemaVersion: String = DefaultParquetSchemaVersion): Unit =
     GeoParquetWriter.write(parseStacItemsToArrow(spark, items), out, schemaVersion)
 
-  /** `parse_stac_ndjson_to_delta_lake` (`_delta_lake.py:28-71`) —
-    * runtime-gated on delta-spark being on the classpath. */
+  /** `parse_stac_ndjson_to_delta_lake` (`_delta_lake.py:28-71`): a
+    * Delta table in the open log format with the `geo` metadata as
+    * table properties ([[PortableDelta.writeStac]]). */
   def parseStacNdjsonToDeltaLake(spark: SparkSession, paths: Seq[String], out: String,
-                                 schemaVersion: String = DefaultParquetSchemaVersion): Unit =
-    DeltaSink.write(parseStacNdjsonToArrow(spark, paths), out, schemaVersion)
+                                 schemaVersion: String = DefaultParquetSchemaVersion): Unit = {
+    PortableDelta.writeStac(parseStacNdjsonToArrow(spark, paths), out, schemaVersion)
+    ()
+  }
 
   /** `to_parquet` (`_to_parquet.py:23-79`): spec-shape DataFrame →
     * GeoParquet with footer metadata. */

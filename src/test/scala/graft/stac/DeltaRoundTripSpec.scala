@@ -9,10 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * items JSON → Normalize → [[PortableDelta.writeStac]] → readTable →
   * Denormalize → fuzzy JSON equality — real STAC schemas (per-asset
   * structs, 3-D bboxes, literal-dot property names, binary geometry /
-  * proj:geometry) through the PORTABLE log, not the jar-gated
-  * delta-spark path ([[DeltaSinkSpec]], which skips where that jar is
-  * absent). Any schema the portable writer cannot carry fails here by
-  * collection name. */
+  * proj:geometry) through the PORTABLE log. Any schema the portable
+  * writer cannot carry fails here by collection name. */
 class DeltaRoundTripSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()

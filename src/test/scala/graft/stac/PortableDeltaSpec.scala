@@ -9,8 +9,7 @@ import scala.jdk.CollectionConverters._
   * Validates the EMITTED BYTES against the open Delta protocol — file
   * naming, action shapes, pinned protocol versions, schemaString — not
   * just our own reader's replay, so any conformant engine (delta-spark,
-  * delta-rs, DuckDB delta) loads these tables. Where delta-spark exists,
-  * DeltaSinkSpec's jar-gated leg is the cross-engine read. */
+  * delta-rs, DuckDB delta) loads these tables. */
 class PortableDeltaSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSpec.spark
@@ -402,12 +401,11 @@ class PortableDeltaSpec extends AnyFunSuite {
     assert(idsAt(2) == Seq(10L, 11L) && idsAt(3) == Seq(10L, 11L, 12L))
   }
 
-  test("DeltaSink.write falls back to the portable log when the jar is absent") {
-    assume(!DeltaSink.available)
+  test("parseStacNdjsonToDeltaLake writes the portable log with the geo properties") {
     val path = tmp()
-    val items = Normalize(StacJsonReader.read(
-      spark, Seq(SparkSpec.resource("/data/naip-pc.json"))))
-    DeltaSink.write(items, path)
+    val fixture = SparkSpec.resource("/data/naip-pc.json")
+    val items = Normalize(StacJsonReader.read(spark, Seq(fixture)))
+    Stac.parseStacNdjsonToDeltaLake(spark, Seq(fixture), path)
     val snap = PortableDelta.snapshot(spark.sessionState.newHadoopConf(), path)
     assert(snap.configuration.contains("geo"))
     assert(PortableDelta.readTable(spark, path).count() == items.count())

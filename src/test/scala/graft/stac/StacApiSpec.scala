@@ -60,7 +60,6 @@ class StacApiSpec extends AnyFunSuite {
   }
 
   test("delta sink without the jar writes the portable log end to end (K3)") {
-    assume(!DeltaSink.available)
     val out = java.nio.file.Files.createTempDirectory("api_delta").toString + "/t"
     Stac.parseStacNdjsonToDeltaLake(spark, Seq(fixture), out)
     val snap = PortableDelta.snapshot(spark.sessionState.newHadoopConf(), out)
