@@ -401,7 +401,7 @@ class PortableDeltaSpec extends AnyFunSuite {
     assert(idsAt(2) == Seq(10L, 11L) && idsAt(3) == Seq(10L, 11L, 12L))
   }
 
-  test("parseStacNdjsonToDeltaLake writes the portable log with the geo properties") {
+  test("parseStacNdjsonToDeltaLake writes the portable log with geo metadata") {
     val path = tmp()
     val fixture = SparkSpec.resource("/data/naip-pc.json")
     val items = Normalize(StacJsonReader.read(spark, Seq(fixture)))
