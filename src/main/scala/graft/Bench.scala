@@ -172,37 +172,47 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
     // adjudication re-runs measure under the same cold-cache regime as the
     // passes they re-check: clear before EACH solo re-run (a warm second
-    // run would compare a cached number against the cold trend)
-    val adjudicated: Seq[(String, Double)] = {
-      results.flatMap {
+    // run would compare a cached number against the cold trend). Like a
+    // later pass, a re-run starts only inside the wall-clock budget; the
+    // ones it skips are counted per query in `adjudication_skipped`.
+    val reruns: Seq[(String, Seq[Double])] = results.flatMap {
       case (name, _, steady, _) => trend.get(name) match {
         case Some(t) if t > 0 && steady > 3 * t =>
           val spec = specs.find(_.name == name).get
-          def coldOnce(): Double = {
+          val re = scala.collection.mutable.ArrayBuffer.empty[Double]
+          while (re.size < 2 && elapsedSec <= budgetSec) {
             spark.catalog.clearCache()
             spec.prepare.foreach(p => p(spark, sfDir))
-            once(spec)
+            re += once(spec)
           }
-          val re = math.min(coldOnce(), coldOnce())
-          System.err.println(f"[bench] adjudicated $name: steady $steady%.2f " +
-            f"vs trend $t%.2f, solo re-runs $re%.2f")
-          Some(name -> re)
+          if (re.isEmpty)
+            System.err.println(f"[bench] adjudication of $name skipped: $elapsedSec%.0f s " +
+              f"elapsed > $budgetSec s budget")
+          else
+            System.err.println(f"[bench] adjudicated $name: steady $steady%.2f " +
+              f"vs trend $t%.2f, solo re-runs ${re.min}%.2f")
+          Some(name -> re.toSeq)
         case _ => None
       }
-    } }
+    }
+    val adjudicated = reruns.collect { case (k, re) if re.nonEmpty => k -> re.min }
+    val skipped = reruns.collect { case (k, re) if re.size < 2 => k -> (2 - re.size) }
     val qsAdj = adjudicated.map { case (k, v) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val qsSkipped = skipped.map { case (k, n) => "\"" + k + "\":" + n }
       .mkString("{", ",", "}")
     // worst-10 by steady: the compact triage view
     val top = results.sortBy(-_._3).take(10)
       .map { case (k, _, st, _) => "\"" + k + "\":" + st }.mkString("{", ",", "}")
     val summary = s"""{"total_steady":$totalSteady,"loadavg":$loadJson,""" +
-      s""""passes":$passes,"n_adjudicated":${adjudicated.size},"top":$top}"""
+      s""""passes":$passes,"n_adjudicated":${adjudicated.size},""" +
+      s""""n_adjudication_skipped":${skipped.map(_._2).sum},"top":$top}"""
     // layout: compact summary FIRST (head-readable without the full
     // map), queries_steady + queries_adjudicated LAST — the driver's
     // tail capture keeps the end of the line, and those two are what
     // the judge adjudicates from (r14's tail caught queries_median and
     // read as a fake 5-30x regression)
-    val line = s"""{"metric":"total","summary":$summary,"value":$total,"unit":"sec","total_steady":$totalSteady,"total_median":$totalMedian,"passes":$passes,"loadavg":$loadJson,"queries":$qs,"queries_median":$qsMedian,"counters":$counters,"sf":"$sfDir","queries_steady":$qsSteady,"queries_adjudicated":$qsAdj}"""
+    val line = s"""{"metric":"total","summary":$summary,"value":$total,"unit":"sec","total_steady":$totalSteady,"total_median":$totalMedian,"passes":$passes,"loadavg":$loadJson,"queries":$qs,"queries_median":$qsMedian,"counters":$counters,"sf":"$sfDir","adjudication_skipped":$qsSkipped,"queries_steady":$qsSteady,"queries_adjudicated":$qsAdj}"""
     println(line)
     // r19 measurement fix: the driver captures only a ~2 KB TAIL of stdout,
     // and the full line above is ~15 KB — its head (summary included) has
@@ -217,6 +227,7 @@ object Bench {
       s""""total_steady":$totalSteady,"total_median":$totalMedian,""" +
       s""""passes":$passes,"loadavg":$loadJson,""" +
       s""""n_adjudicated":${adjudicated.size},""" +
+      s""""adjudication_skipped":$qsSkipped,""" +
       s""""queries_adjudicated":$qsAdj,"top_steady":$top,""" +
       s""""full_maps":"BENCH_LOCAL.json (in-repo) and /tmp/bench_out.json"}"""
     println(compact)

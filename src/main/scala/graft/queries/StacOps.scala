@@ -58,8 +58,7 @@ object StacOps {
   private def itemsGeoParquet(s: SparkSession, dir: String): String =
     geoTables.getOrElseUpdate((s, dir), {
       val out = java.nio.file.Files.createTempDirectory("stac_gpq").toString + "/items"
-      val norm = Normalize(
-        StacJsonReader.read(s, Seq(itemsNdjsonDir(s, dir))), bboxDims = Some(4))
+      val norm = Normalize(StacJsonReader.read(s, Seq(itemsNdjsonDir(s, dir))))
       graft.stac.GeoParquetWriter.write(norm, out)
       out
     })
@@ -266,8 +265,7 @@ object StacOps {
         FROM orders
         ORDER BY id"""),
       (s, dir) => {
-        val norm = Normalize(
-          StacJsonReader.read(s, Seq(itemsNdjsonDir(s, dir))), bboxDims = Some(4))
+        val norm = Normalize(StacJsonReader.read(s, Seq(itemsNdjsonDir(s, dir))))
         norm.select(col("id"),
             date_format(col("datetime"), graft.stac.StacSchema.Rfc3339Format).as("datetime_out"),
             col("bbox").getField("xmin").as("xmin"),

@@ -13,8 +13,11 @@ object Normalize {
 
   /** @param dropInvalidProperties on property/top-level name collision:
     *   true = drop with warning, false = error (`_to_arrow.py:15-53`).
-    * @param bboxDims pass Some(4|6) to skip the dimensionality probe job
-    *   when the caller already knows the bbox shape. */
+    * @param bboxDims the bbox width, 4 or 6. The width comes from the
+    *   first of three sources that has it: this argument; the `bbox`
+    *   metadata an inferring [[StacJsonReader]] read leaves
+    *   ([[StacJsonReader.bboxDims]]); a probe job over `df`. Leave it
+    *   None after a reader call — the metadata already carries it. */
   def apply(df: DataFrame, dropInvalidProperties: Boolean = true,
             bboxDims: Option[Int] = None): DataFrame = {
     val hoisted = bringPropertiesToTopLevel(df, dropInvalidProperties)
@@ -54,27 +57,34 @@ object Normalize {
     * timestamp[µs, UTC] (`_to_arrow.py:56-103`). Errors on non-string,
     * non-timestamp input like the reference. */
   def convertTimestampColumns(df: DataFrame): DataFrame = {
-    StacSchema.TimestampColumns.foldLeft(df) { (d, name) =>
-      d.schema.fields.find(_.name == name) match {
-        case None => d
-        case Some(f) => f.dataType match {
-          case TimestampType => d
-          case StringType | NullType => d.withColumn(name, col(name).cast(TimestampType))
-          case other => throw new IllegalArgumentException(
-            s"Inferred time column '$name' was expected to be a string or timestamp but got $other")
-        }
-      }
+    val casts = StacSchema.TimestampColumns.flatMap { name =>
+      df.schema.fields.find(_.name == name).flatMap(_.dataType match {
+        case TimestampType => None
+        case StringType | NullType => Some(name -> col(name).cast(TimestampType))
+        case other => throw new IllegalArgumentException(
+          s"Inferred time column '$name' was expected to be a string or timestamp but got $other")
+      })
     }
+    // one projection: each withColumn would analyze the whole wide plan again
+    if (casts.isEmpty) df else df.withColumns(casts.toMap)
   }
 
   /** P3: bbox list → struct of bounds so Parquet row-group min/max stats
     * prune spatially (`_to_arrow.py:106-200`; the spec motivation at
-    * 124-130). Dimensionality (2-D xmin..ymax vs 3-D with zmin/zmax) is
-    * probed with one tiny aggregate; mixed 2-D/3-D input is rejected. */
+    * 124-130). The width (2-D xmin..ymax vs 3-D with zmin/zmax) comes from,
+    * in order:
+    *  1. `bboxDims`, the caller's word, taken as is;
+    *  2. the `bbox` field metadata a [[StacJsonReader]] read recorded while
+    *     decoding the items — no job; a row of another width (one that
+    *     arrived after an `InferSample` prefix or against an `Explicit`
+    *     schema) fails the action instead of being truncated;
+    *  3. one tiny aggregate probe over `df`, which rejects mixed 2-D/3-D
+    *     input eagerly. */
   def convertBboxToStruct(df: DataFrame, bboxDims: Option[Int] = None): DataFrame = {
     df.schema.fields.find(_.name == "bbox") match {
       case Some(StructField(_, ArrayType(_, _), _, _)) =>
-        val dims = bboxDims.getOrElse {
+        val learned = if (bboxDims.isEmpty) StacJsonReader.bboxDims(df.schema) else None
+        val dims = bboxDims.orElse(learned).getOrElse {
           // the probe is an action — impossible on a streaming frame
           require(!df.isStreaming,
             "bbox dimensionality cannot be probed on a streaming DataFrame; " +
@@ -91,7 +101,14 @@ object Normalize {
         val st = struct(names.zipWithIndex.map { case (n, i) =>
           element_at(col("bbox"), i + 1).cast(DoubleType).as(n)
         }: _*)
-        df.withColumn("bbox", when(col("bbox").isNull, lit(null)).otherwise(st))
+        val nulls = when(col("bbox").isNull, lit(null))
+        val guarded =
+          if (learned.isEmpty) nulls
+          else nulls.when(size(col("bbox")) =!= lit(dims), raise_error(concat(
+            lit("Mixed 2d-3d bounding boxes not yet supported: an item has "),
+            size(col("bbox")).cast(StringType),
+            lit(s" bbox values where the read recorded $dims"))))
+        df.withColumn("bbox", guarded.otherwise(st))
       case _ => df
     }
   }

@@ -1,10 +1,11 @@
 package graft.stac
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ObjectNode, TextNode}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, MetadataBuilder, StringType, StructType}
+import org.apache.spark.util.AccumulatorV2
 
 /** STAC JSON sources (SURVEY §2.1 S1–S4).
   *
@@ -21,6 +22,10 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * Spark's distributed two-pass JSON read; the three reference schema
   * strategies (`_api.py:88-155`) map to Explicit / InferFull /
   * InferSample.
+  *
+  * The codec pass also learns the bbox width: every strategy leaves it on
+  * the `bbox` field's metadata ([[bboxDims]]) when all items agree, so
+  * [[Normalize]] shapes the bbox struct without a pass of its own.
   */
 object StacJsonReader {
 
@@ -35,14 +40,111 @@ object StacJsonReader {
     * Divergence from the reference: FirstBatch raises on ANY later-chunk
     * schema disagreement; here FAILFAST raises on type conflicts, while
     * fields absent from the sampled prefix are silently dropped (Spark's
-    * JSON reader ignores unknown fields). Pinned by InferSampleSpec. */
+    * JSON reader ignores unknown fields). Pinned by InferSampleSpec. The
+    * bbox width also comes from the sample: a later item of another width
+    * fails the action that reads it (BboxDimsSpec), it is never truncated. */
   final case class InferSample(n: Int) extends SchemaStrategy
 
   @transient private lazy val mapper = new ObjectMapper()
 
+  /** Metadata key on the JSON-shape `bbox` field: the one bbox width (4 or
+    * 6) the reader saw. */
+  private val BboxDimsKey = "stac:bbox_dims"
+
+  /** The bbox width a read recorded on `schema`, if every item agreed. */
+  def bboxDims(schema: StructType): Option[Int] =
+    schema.fields.find(_.name == "bbox").map(_.metadata)
+      .filter(_.contains(BboxDimsKey)).map(_.getLong(BboxDimsKey).toInt)
+
   /** S1/S2: files → Dataset[String] of single-item JSON docs with all
     * geometry fields replaced by hex-encoded ISO WKB. */
-  def readItemStrings(spark: SparkSession, paths: Seq[String]): Dataset[String] = {
+  def readItemStrings(spark: SparkSession, paths: Seq[String]): Dataset[String] =
+    rawItems(spark, paths).map(geometryToWkbHex)(Encoders.STRING)
+
+  /** Full read: items → JSON-shape DataFrame with binary geometry. */
+  def read(spark: SparkSession, paths: Seq[String],
+           strategy: SchemaStrategy = InferFull): DataFrame =
+    readItemDataset(spark, rawItems(spark, paths), strategy)
+
+  /** S3 for in-memory items: raw item-JSON strings → JSON-shape DataFrame
+    * (the codec is applied here — pass strings WITHOUT WKB hex). The one
+    * strategy dispatch shared by every entry point (file, in-memory,
+    * facade). */
+  def readItemDataset(spark: SparkSession, items: Dataset[String],
+                      strategy: SchemaStrategy = InferFull): DataFrame = {
+    // registered per read: the codec records every bbox length it decodes
+    val widths = new BboxWidths
+    spark.sparkContext.register(widths, "stac bbox widths")
+    val coded = items.map { s =>
+      val node = wkbHexNode(s)
+      widths.record(node)
+      mapper.writeValueAsString(node)
+    }(Encoders.STRING)
+    val (raw, dims) = strategy match {
+      case Explicit(s) =>
+        // FAILFAST: a row conflicting with the supplied schema must error
+        // (the reference raises on schema mismatch); PERMISSIVE would
+        // silently null the record. Binary geometry fields in a
+        // caller-supplied spec-shape schema read as hex STRINGS at this
+        // point (the codec already ran) — swap them so the JSON reader
+        // doesn't base64-mangle them; hexGeometryToBinary converts after.
+        (spark.read.schema(binaryAsString(s)).option("mode", "FAILFAST").json(coded),
+          bboxDims(s))
+      case InferFull =>
+        // inference is eager: every item went through the codec once
+        // the schema is back, so the accumulator is complete here
+        val df = spark.read.json(coded)
+        (df, widths.single)
+      case InferSample(n) =>
+        val sample = coded.take(n)
+        val inferred = spark.read.json(spark.createDataset(sample)(Encoders.STRING)).schema
+        val sampled = new BboxWidths
+        sample.foreach(s => sampled.record(mapper.readTree(s)))
+        (spark.read.schema(inferred)
+          .option("mode", "FAILFAST") // later chunks disagreeing must fail
+          .json(coded), sampled.single)
+    }
+    withBboxDims(hexGeometryToBinary(raw), dims)
+  }
+
+  /** Record `dims` on a list-typed `bbox` field, where [[bboxDims]] finds
+    * it; a frame without one, or already carrying it, comes back as is. */
+  private def withBboxDims(df: DataFrame, dims: Option[Int]): DataFrame =
+    df.schema.fields.find(_.name == "bbox") match {
+      case Some(f) if f.dataType.isInstanceOf[ArrayType] && dims.isDefined &&
+          bboxDims(df.schema) != dims =>
+        val md = new MetadataBuilder().withMetadata(f.metadata)
+          .putLong(BboxDimsKey, dims.get.toLong).build()
+        df.withColumn("bbox", col("bbox").as("bbox", md))
+      case _ => df
+    }
+
+  /** Min and max length of the non-null `bbox` arrays seen. Both are
+    * unchanged by a re-run task or a second pass over the same items, so
+    * the value stays exact however often the codec runs. */
+  private final class BboxWidths extends AccumulatorV2[Int, (Int, Int)] {
+    private var lo = Int.MaxValue
+    private var hi = Int.MinValue
+    def isZero: Boolean = lo == Int.MaxValue
+    def copy(): BboxWidths = { val c = new BboxWidths; c.lo = lo; c.hi = hi; c }
+    def reset(): Unit = { lo = Int.MaxValue; hi = Int.MinValue }
+    def add(n: Int): Unit = { lo = math.min(lo, n); hi = math.max(hi, n) }
+    def merge(other: AccumulatorV2[Int, (Int, Int)]): Unit = {
+      val (l, h) = other.value
+      lo = math.min(lo, l); hi = math.max(hi, h)
+    }
+    def value: (Int, Int) = (lo, hi)
+    def record(item: JsonNode): Unit = {
+      val b = item.get("bbox")
+      if (b != null && b.isArray) add(b.size())
+    }
+    /** The width when every recorded bbox had the same one. */
+    def single: Option[Int] = if (!isZero && lo == hi) Some(lo) else None
+  }
+
+  /** Item JSON strings before the codec: ndjson lines and the items of
+    * whole-file JSON documents. */
+  private def rawItems(spark: SparkSession, paths: Seq[String]): Dataset[String] = {
     import spark.implicits._
     val (ndjson, whole) = paths.partition(p => detectNdjson(spark, p))
     val lineItems: Dataset[String] =
@@ -54,42 +156,7 @@ object StacJsonReader {
         spark.sparkContext.wholeTextFiles(whole.mkString(",")).values
           .flatMap(splitItems).toDS()
       else spark.emptyDataset[String]
-    lineItems.union(wholeItems).map(geometryToWkbHex)
-  }
-
-  /** Full read: items → JSON-shape DataFrame with binary geometry. */
-  def read(spark: SparkSession, paths: Seq[String],
-           strategy: SchemaStrategy = InferFull): DataFrame =
-    readCoded(spark, readItemStrings(spark, paths), strategy)
-
-  /** S3 for in-memory items: raw item-JSON strings → JSON-shape DataFrame
-    * (the codec is applied here — pass strings WITHOUT WKB hex). */
-  def readItemDataset(spark: SparkSession, items: Dataset[String],
-                      strategy: SchemaStrategy = InferFull): DataFrame =
-    readCoded(spark, items.map(geometryToWkbHex)(items.encoder), strategy)
-
-  /** One strategy dispatch shared by every entry point (file, in-memory,
-    * facade) — `items` must already be WKB-hex-coded. */
-  private def readCoded(spark: SparkSession, items: Dataset[String],
-                        strategy: SchemaStrategy): DataFrame = {
-    val raw = strategy match {
-      case Explicit(s) =>
-        // FAILFAST: a row conflicting with the supplied schema must error
-        // (the reference raises on schema mismatch); PERMISSIVE would
-        // silently null the record. Binary geometry fields in a
-        // caller-supplied spec-shape schema read as hex STRINGS at this
-        // point (the codec already ran) — swap them so the JSON reader
-        // doesn't base64-mangle them; hexGeometryToBinary converts after.
-        spark.read.schema(binaryAsString(s)).option("mode", "FAILFAST").json(items)
-      case InferFull => spark.read.json(items)
-      case InferSample(n) =>
-        val sample = spark.createDataset(items.take(n))(items.encoder)
-        val inferred = spark.read.json(sample).schema
-        spark.read.schema(inferred)
-          .option("mode", "FAILFAST") // later chunks disagreeing must fail
-          .json(items)
-    }
-    hexGeometryToBinary(raw)
+    lineItems.union(wholeItems)
   }
 
   /** Detect ndjson by peeking: the first line must be a complete JSON
@@ -133,7 +200,7 @@ object StacJsonReader {
     * the first top-level value Jackson happens to parse). */
   private def splitItems(content: String): Iterator[String] = {
     val parser = mapper.createParser(content)
-    val docs = Iterator.continually(parser.readValueAsTree[com.fasterxml.jackson.databind.JsonNode]())
+    val docs = Iterator.continually(parser.readValueAsTree[JsonNode]())
       .takeWhile(_ != null)
       .toSeq
     docs.iterator.flatMap { node =>
@@ -148,7 +215,12 @@ object StacJsonReader {
   /** G1 at the string level: convert `geometry`, `properties.proj:geometry`
     * and every `assets.*.proj:geometry` GeoJSON object to hex ISO WKB, so
     * JSON inference sees uniform strings (`_batch.py:89-118`). */
-  def geometryToWkbHex(itemJson: String): String = {
+  def geometryToWkbHex(itemJson: String): String =
+    mapper.writeValueAsString(wkbHexNode(itemJson))
+
+  /** [[geometryToWkbHex]] up to the tree, which the reader also reads the
+    * bbox length from. */
+  private def wkbHexNode(itemJson: String): ObjectNode = {
     // the shared @transient lazy mapper re-initializes once per executor
     // JVM; constructing an ObjectMapper per row dominates the codec cost
     val node = mapper.readTree(itemJson).asInstanceOf[ObjectNode]
@@ -173,7 +245,7 @@ object StacJsonReader {
           convert(e.getValue.asInstanceOf[ObjectNode], "proj:geometry")
       }
     }
-    mapper.writeValueAsString(node)
+    node
   }
 
   /** Every BinaryType leaf becomes StringType (the shape between the hex

@@ -28,12 +28,14 @@ object StacStream {
 
   /** Bounded helper: schema AND bbox dimensionality from a sample — the
     * streaming normalize cannot probe dimensionality itself (it would be
-    * an action on an unbounded frame). */
+    * an action on an unbounded frame). The sample's read already recorded
+    * the width on the schema; the probe runs only when it did not (mixed
+    * widths, which the probe rejects). */
   def inferIngestSpec(spark: SparkSession, samplePaths: Seq[String]): (StructType, Option[Int]) = {
     val sample = StacJsonReader.read(spark, samplePaths)
     val dims =
       if (!sample.columns.contains("bbox")) None
-      else Normalize.probeBboxDims(sample)
+      else StacJsonReader.bboxDims(sample.schema).orElse(Normalize.probeBboxDims(sample))
     (sample.schema, dims)
   }
 
