@@ -216,7 +216,8 @@ private[stac] trait DeltaAlterOps extends Serializable { self: PortableDelta.typ
     import org.apache.spark.sql.functions.col
     var attempt = 0
     while (true) {
-      val snap = smallSnapshot(spark, path)
+      val ls = logState(spark, path, None)
+      val snap = ls.small
       requireWritable(snap, path)
       val listed = snap.readerFeatures.contains(name) ||
         snap.writerFeatures.contains(name)
@@ -236,7 +237,7 @@ private[stac] trait DeltaAlterOps extends Serializable { self: PortableDelta.typ
       name match {
         case "deletionVectors" =>
           requirePropOff("delta.enableDeletionVectors")
-          val dvFiles = logState(spark, path, None).files(_.dv.isDefined)
+          val dvFiles = ls.files(_.dv.isDefined)
           require(dvFiles.isEmpty,
             s"cannot drop 'deletionVectors' from $path: ${dvFiles.size} live " +
               "file(s) still carry deletion vectors — run reorgPurge first")
@@ -317,7 +318,7 @@ private[stac] trait DeltaAlterOps extends Serializable { self: PortableDelta.typ
             s"cannot drop 'v2Checkpoint' from $path while " +
               "delta.checkpointPolicy=v2")
           newCfg = newCfg - "delta.checkpointPolicy"
-          checkpointRefFor(conf, path).foreach { ref =>
+          ls.checkpoint.foreach { ref =>
             val fs = logDir(path).getFileSystem(conf)
             val uuidAt = (f"${ref.version}%020d" +
               "\\.checkpoint\\.[0-9a-fA-F-]{36}\\.parquet").r

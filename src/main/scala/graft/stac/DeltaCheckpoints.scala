@@ -103,6 +103,16 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
   private[stac] def isCommitJson(name: String): Boolean =
     name.matches("\\d{20}\\.json")
 
+  /** True when `_delta_log` holds a commit JSON, a compacted span or a
+    * checkpoint — one listing, no replay: the existence check of every
+    * write route and of the clone target. Table state is [[logState]]. */
+  private[stac] def tableExists(conf: Configuration, path: String): Boolean = {
+    val dir = logDir(path)
+    val fs = dir.getFileSystem(conf)
+    fs.exists(dir) && fs.listStatus(dir).exists(s => s.isFile && s.getPath.getName
+      .matches("\\d{20}\\.(json|\\d{20}\\.compacted\\.json|checkpoint\\..*parquet)"))
+  }
+
   /** Every commit JSON in the log as (version, path), ascending. */
   private[stac] def listJsonCommits(fs: org.apache.hadoop.fs.FileSystem,
                               path: String): Seq[(Long, Path)] =
@@ -164,16 +174,26 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
         ref.foreach(r => require(asOf.isDefined,
           s"non-contiguous Delta log after checkpoint ${r.version}: " +
             jsons.keys.filter(_ > r.version).toSeq.sorted.mkString(",")))
-        val plan = replayPlan(fs, path, jsons, 0L, target).getOrElse(
-          throw new IllegalArgumentException(
-            s"version $target of $path is not reconstructable: JSON log covers " +
-              s"[${jsons.keySet.minOption.getOrElse(-1L)}, ${jsons.keySet.maxOption.getOrElse(-1L)}]" +
-              ref.fold(", no checkpoint")(r => s", checkpoint at ${r.version}") +
-              " (cleanupLog truncated past it)"))
-        val st = new ReplayState(path)
-        plan.foreach(applyJsonCommit(fs, _, st))
-        youngState(st.toSnapshot(target))
+        youngState(replayJson(fs, path, jsons, target)(
+          s"version $target of $path is not reconstructable: JSON log covers " +
+            s"[${jsons.keySet.minOption.getOrElse(-1L)}, ${jsons.keySet.maxOption.getOrElse(-1L)}]" +
+            ref.fold(", no checkpoint")(r => s", checkpoint at ${r.version}") +
+            " (cleanupLog truncated past it)"))
     }
+  }
+
+  /** THE JSON replay: versions 0 through `target` on the driver, no
+    * Spark job — [[logState]]'s young branch and the engine-less
+    * [[snapshot]] both run it. Compacted spans substitute where they
+    * fit; `gap` words the error when no plan reaches back to 0. */
+  private[stac] def replayJson(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                               jsons: Map[Long, Path], target: Long)(gap: => String): Snapshot = {
+    val plan = replayPlan(fs, path, jsons, 0L, target)
+      .getOrElse(throw new IllegalArgumentException(gap))
+    val st = new ReplayState(path)
+    plan.foreach(jsonActions(fs, _).foreach(st.applyJson))
+    require(st.schemaJson.nonEmpty, s"Delta log at ${logDir(path)} has no metaData action")
+    st.toSnapshot(target)
   }
 
   private def youngState(snap: Snapshot): LogState =
@@ -737,9 +757,6 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
     }
   }
 
-  private[stac] def lastCheckpointVersion(conf: Configuration, path: String): Option[Long] =
-    lastCheckpointRef(conf, path).map(_.version)
-
   /** Checkpoint discovery by LISTING — the spec makes `_last_checkpoint`
     * a hint, not the source of truth: a writer that crashed between the
     * checkpoint parquet and the pointer update (or external maintenance
@@ -1243,10 +1260,6 @@ private[stac] trait DeltaCheckpointOps extends Serializable { self: PortableDelt
       if (r.length <= 11 || r.isNullAt(11)) None else Some(r.getLong(11)),
       if (r.length <= 12 || r.isNullAt(12)) None else Some(r.getString(12)))
   }
-
-  private[stac] def applyJsonCommit(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                              st: ReplayState): Unit =
-    jsonActions(fs, p).foreach(st.applyJson)
 
   /** Time travel: the table state AS OF `versionAsOf` (the Delta
     * `versionAsOf` read) — [[logState]] at that version: the newest

@@ -1338,8 +1338,7 @@ private[stac] trait DeltaDmlOps extends Serializable { self: PortableDelta.type 
       case Some(v) => snapshotAt(spark, sourcePath, v)
       case None => snapshot(spark, sourcePath)
     }
-    require(currentSnapshot(conf, targetPath).isEmpty &&
-      lastCheckpointVersion(conf, targetPath).isEmpty,
+    require(!tableExists(conf, targetPath),
       s"clone target $targetPath already holds a Delta table")
     val srcRoot = new Path(sourcePath)
     val fs = srcRoot.getFileSystem(conf)

@@ -987,7 +987,7 @@ private[stac] trait DeltaMaintenanceOps extends Serializable { self: PortableDel
   def cleanupLog(conf: Configuration, path: String,
                  retainMillis: Option[Long],
                  protectBefore: Option[Long]): Int =
-    lastCheckpointVersion(conf, path) match {
+    lastCheckpointRef(conf, path).map(_.version) match {
       case None => 0
       case Some(cv) =>
         val dir = logDir(path)

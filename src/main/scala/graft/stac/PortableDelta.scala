@@ -240,10 +240,13 @@ object PortableDelta
     propertyFeatures(properties) // unknown delta.feature.* refuses BEFORE staging
     val df0 = dfRaw
     val conf = df0.sparkSession.sessionState.newHadoopConf()
+    // only overwrite reads the live files (remove actions, numRemovedFiles)
     def readPrior(): Option[Snapshot] =
-      if (checkpointRefFor(conf, path).isDefined)
-        Some(snapshot(df0.sparkSession, path)) // checkpoint-truncated log
-      else currentSnapshot(conf, path)
+      if (!tableExists(conf, path)) None
+      else {
+        val ls = logState(df0.sparkSession, path, None)
+        Some(if (mode == "overwrite") ls.snapshot(_ => true) else ls.small)
+      }
     val prior0 = readPrior()
     prior0.foreach(p => requireWritable(p, path))
     require(mode != "error" || prior0.isEmpty,
@@ -704,14 +707,24 @@ object PortableDelta
     write(df, path, properties = kv, mode = mode, footerKv = kv)
   }
 
-  /** Replay the log: contiguous versions from 0, newline-delimited JSON
-    * actions, last protocol/metaData win, adds minus removes by path.
-    * JSON-only — on a checkpoint-truncated log this fails with a pointer
-    * to the SparkSession overload (reading the checkpoint parquet needs
-    * an engine). */
-  def snapshot(conf: Configuration, path: String): Snapshot =
-    currentSnapshot(conf, path).getOrElse(
-      throw new IllegalArgumentException(s"no Delta table at $path (no _delta_log)"))
+  /** Replay the JSON log from version 0 on the driver — [[replayJson]],
+    * the replay [[logState]] runs on a young log. JSON-only — on a
+    * checkpoint-truncated log this fails with a pointer to the
+    * SparkSession overload (reading the checkpoint parquet needs an
+    * engine). */
+  def snapshot(conf: Configuration, path: String): Snapshot = {
+    require(tableExists(conf, path), s"no Delta table at $path (no _delta_log)")
+    val dir = logDir(path)
+    val fs = dir.getFileSystem(conf)
+    val jsons = listJsonCommits(fs, path)
+    def truncated = if (discoverCheckpoints(conf, path).isEmpty) ""
+      else " — this log is checkpoint-truncated; use snapshot(spark, path)"
+    val current = (jsons.map(_._1) ++ compactedSpans(fs, path).values.flatten.map(_._1))
+      .maxOption.getOrElse(throw new IllegalArgumentException(
+        s"Delta log at $dir has no JSON commits$truncated"))
+    replayJson(fs, path, jsons.toMap, current)(
+      s"non-contiguous Delta log at $dir: versions ${jsons.map(_._1).mkString(",")}$truncated")
+  }
 
   /** Checkpoint-aware replay ([[logState]]): start from the newest
     * checkpoint's parquet state when one exists (single-file, the
@@ -780,16 +793,15 @@ object PortableDelta
   }
 
   /** Current snapshot WITHOUT file state (`files = Nil`) — protocol/
-    * metaData/txns/domainMetadata only, O(small state + tail) driver
-    * cost on checkpoint-seeded tables. For schema/config gates that
-    * never need the add list. */
+    * metaData/txns/domainMetadata only. No job on a young log; on a
+    * checkpointed one 2 Spark jobs over the checkpoint's non-file rows,
+    * then the JSON tail on the driver. For schema/config gates. */
   private[graft] def smallSnapshot(spark: SparkSession, path: String): Snapshot =
     logState(spark, path, None).small
 
-  /** The table's current version — a SMALL-state read (protocol/
-    * metaData/tail only, never the add list): the poll a streaming
-    * consumer issues per trigger, O(JSON tail) however large the
-    * table. */
+  /** The table's current version — a [[smallSnapshot]] read (never the
+    * add list, so 2 Spark jobs on a checkpointed log however many files
+    * it holds): the poll a streaming consumer issues per trigger. */
   def currentVersion(spark: SparkSession, path: String): Long =
     smallSnapshot(spark, path).version
 
@@ -1847,33 +1859,5 @@ object PortableDelta
                 s"v$version failed: ${e.getMessage}")
         }
       }
-  }
-
-
-  private[stac] def currentSnapshot(conf: Configuration, path: String): Option[Snapshot] = {
-    val dir = logDir(path)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return None
-    val versioned = listJsonCommits(fs, path)
-    val jsons = versioned.toMap
-    val spanEnds = compactedSpans(fs, path).values.flatten.map(_._1)
-    val truncated = " — this log is checkpoint-truncated; use snapshot(spark, path)"
-    val current = (jsons.keySet ++ spanEnds).maxOption match {
-      case Some(c) => c
-      case None =>
-        require(checkpointRefFor(conf, path).isEmpty,
-          s"Delta log at $dir has no JSON commits$truncated")
-        return None
-    }
-    // replay through the plan: compacted spans substitute for their
-    // commits wherever usable (longest first), plain JSON elsewhere
-    val plan = replayPlan(fs, path, jsons, 0L, current)
-    require(plan.isDefined,
-      s"non-contiguous Delta log at $dir: versions ${versioned.map(_._1).mkString(",")}" +
-        (if (checkpointRefFor(conf, path).isDefined) truncated else ""))
-    val st = new ReplayState(path)
-    plan.get.foreach(p => applyJsonCommit(fs, p, st))
-    require(st.schemaJson.nonEmpty, s"Delta log at $dir has no metaData action")
-    Some(st.toSnapshot(current))
   }
 }

@@ -101,13 +101,13 @@ class PortableDeltaDataSource extends RelationProvider
         require(n.isArray, s"malformed __partition_columns: $json")
         n.elements().asScala.map(_.asText()).toSeq
       }.getOrElse(Nil)
-    val exists = PortableDelta.currentSnapshot(
-      spark.sessionState.newHadoopConf(), path).isDefined
     val m = mode match {
       case SaveMode.ErrorIfExists => Some("error")
       case SaveMode.Append => Some("append")
       case SaveMode.Overwrite => Some("overwrite")
-      case SaveMode.Ignore => if (exists) None else Some("error")
+      case SaveMode.Ignore =>
+        if (PortableDelta.tableExists(spark.sessionState.newHadoopConf(), path)) None
+        else Some("error")
     }
     m.foreach(mm => PortableDelta.write(data.toDF(), path, mode = mm,
       partitionBy = partitionBy,
@@ -229,9 +229,8 @@ private[stac] class PortableDeltaSink(path: String, mode: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val batch = org.apache.spark.sql.GraftSqlShim.replayableBatch(data)
     PortableDelta.write(batch, path,
-      mode = if (PortableDelta.currentSnapshot(
-          batch.sparkSession.sessionState.newHadoopConf(), path).isEmpty)
-        "error" else mode,
+      mode = if (PortableDelta.tableExists(
+          batch.sparkSession.sessionState.newHadoopConf(), path)) mode else "error",
       txn = Some((appId, batchId)),
       partitionBy = partitionBy, mergeSchema = mergeSchema)
     ()
@@ -251,9 +250,7 @@ private[stac] class PortableDeltaMergeStreamSink(path: String,
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val batch = org.apache.spark.sql.GraftSqlShim.replayableBatch(data)
-    val exists = PortableDelta.currentSnapshot(
-      batch.sparkSession.sessionState.newHadoopConf(), path).isDefined
-    if (!exists)
+    if (!PortableDelta.tableExists(batch.sparkSession.sessionState.newHadoopConf(), path))
       PortableDelta.write(batch, path, txn = Some((appId, batchId)))
     else
       PortableDelta.merge(batch.sparkSession, path, batch, keys,

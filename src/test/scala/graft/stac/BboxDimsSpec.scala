@@ -1,9 +1,5 @@
 package graft.stac
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftSparkShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,29 +26,6 @@ class BboxDimsSpec extends AnyFunSuite {
     f.toString
   }
 
-  /** Jobs this thread starts while `body` runs, told apart from any other
-    * suite's work by a job group of its own. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val group = s"bbox-dims-${System.nanoTime()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "BboxDimsSpec")
-    try {
-      val out = body
-      GraftSparkShim.drainListenerBus(spark)
-      (out, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def causes(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 
@@ -62,7 +35,7 @@ class BboxDimsSpec extends AnyFunSuite {
   test("a uniform 2-D read normalizes with no job, as if bboxDims = Some(4) were passed") {
     val json = StacJsonReader.read(spark, Seq(writeNdjson(flat)))
     assert(StacJsonReader.bboxDims(json.schema).contains(4))
-    val (norm, jobs) = jobsDuring(Normalize(json))
+    val (norm, jobs) = SparkSpec.jobsDuring(Normalize(json))
     assert(jobs == 0)
     val given = Normalize(json, bboxDims = Some(4))
     assert(norm.schema == given.schema)
@@ -73,7 +46,7 @@ class BboxDimsSpec extends AnyFunSuite {
   test("the 3-D copc fixture gets the 6-field struct with no job") {
     val json = StacJsonReader.read(spark,
       Seq(SparkSpec.resource("/data/3dep-lidar-copc-pc.json")))
-    val (norm, jobs) = jobsDuring(Normalize(json))
+    val (norm, jobs) = SparkSpec.jobsDuring(Normalize(json))
     assert(jobs == 0)
     val bbox = norm.schema("bbox").dataType.asInstanceOf[StructType]
     assert(bbox.fieldNames.toSeq == Seq("xmin", "ymin", "zmin", "xmax", "ymax", "zmax"))
@@ -102,7 +75,7 @@ class BboxDimsSpec extends AnyFunSuite {
     assert(StacJsonReader.bboxDims(schema).contains(4))
     val json = StacJsonReader.read(spark, Seq(writeNdjson(Seq(flat.head, tall))),
       StacJsonReader.Explicit(schema))
-    val (norm, jobs) = jobsDuring(Normalize(json))
+    val (norm, jobs) = SparkSpec.jobsDuring(Normalize(json))
     assert(jobs == 0)
     val e = intercept[Exception](norm.collect())
     assert(causes(e).contains("6 bbox values where the read recorded 4"), causes(e))

@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint whose tail removes and re-adds checkpointed paths, a
   * multi-part checkpoint, a v2 checkpoint with sidecars, and a
   * checkpoint whose `_last_checkpoint` pointer is gone. Each shape is
-  * one table-driven row; each reader must reproduce the modelled ids. */
+  * one table-driven row; each reader must reproduce the modelled ids,
+  * the engine-less JSON replay must match wherever the JSON log still
+  * starts at version 0, and the format route's writers and the clone
+  * target check must see the table as existing. */
 class ReaderAgreementSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSpec.spark
@@ -96,6 +99,42 @@ class ReaderAgreementSpec extends AnyFunSuite {
       assert(at.files.toSet == snap.files.toSet, "snapshotAt(current) files")
       assert(at.copy(files = Nil) == snap.copy(files = Nil),
         "snapshotAt(current) small state")
+
+      val conf = spark.sessionState.newHadoopConf()
+      if (new java.io.File(f"$path/_delta_log/${0L}%020d.json").exists) {
+        val json = PortableDelta.snapshot(conf, path)
+        assert(json.files.toSet == snap.files.toSet, "snapshot(conf) files")
+        assert(json.copy(files = Nil) == snap.copy(files = Nil),
+          "snapshot(conf) small state")
+      } else {
+        val e = intercept[IllegalArgumentException](PortableDelta.snapshot(conf, path))
+        assert(e.getMessage.contains("checkpoint-truncated"), e.getMessage)
+      }
+
+      rows(60L, 61L, 1).write.format("portable-delta").mode("append").save(path)
+      rows(61L, 62L, 1).write.format("portable-delta").mode("ignore").save(path)
+      assert(ids(PortableDelta.readTable(spark, path)) == expectedIds :+ 60L,
+        "format-route append, then ignore")
+
+      val e = intercept[IllegalArgumentException](
+        PortableDelta.cloneShallow(spark, path, path))
+      assert(e.getMessage.contains("already holds a Delta table"), e.getMessage)
     }
+  }
+
+  test("an append on a checkpointed log reads no checkpointed file list") {
+    val s = spark; import s.implicits._
+    val path = tmp()
+    PortableDelta.write(rows(0L, 10L, 1), path)
+    PortableDelta.write(rows(10L, 20L, 1), path, mode = "append")
+    PortableDelta.write(rows(20L, 30L, 1), path, mode = "append")
+    PortableDelta.checkpoint(spark, path)
+    val batch = Seq((30L, "t30")).toDF("id", "tag")
+    val (_, jobs) = SparkSpec.jobsDuring(
+      PortableDelta.write(batch, path, mode = "append"))
+    // 2 jobs seed the small state from the checkpoint, 2 write the data
+    // and collect its stats; the checkpoint's add rows are never collected
+    assert(jobs == 4)
+    assert(ids(PortableDelta.readTable(spark, path)) == (0L to 30L))
   }
 }

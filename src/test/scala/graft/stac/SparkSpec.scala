@@ -1,5 +1,9 @@
 package graft.stac
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftSparkShim
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for all suites. */
@@ -18,6 +22,29 @@ object SparkSpec {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Jobs this thread starts while `body` runs, told apart from any other
+    * suite's work by a job group of its own. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val group = s"jobs-during-${System.nanoTime()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsDuring")
+    try {
+      val out = body
+      GraftSparkShim.drainListenerBus(spark)
+      (out, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   def resource(name: String): String =
